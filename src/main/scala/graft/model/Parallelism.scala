@@ -31,16 +31,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Parallelism {
   def floor(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val want = s.conf.getOption("spark.graft.scan.minParallelism") match {
-      case Some(v) =>
-        try v.trim.toInt
-        catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"spark.graft.scan.minParallelism must be an integer, got '$v'")
-        }
-      case None => s.sparkContext.defaultParallelism
-    }
+    val want = minParallelism(df)
     if (want <= 0) return df
     // SCAN-ONLY precondition, enforced (advice r18): the floor exists
     // for under-split *scans*. On an exchange-bearing frame the
@@ -74,10 +65,19 @@ object Parallelism {
     * constant); at production byte sizes AQE would not have coalesced
     * below that count, making the pin a no-op in effect. Same
     * `spark.graft.scan.minParallelism` override/disable contract as
-    * [[floor]]. */
+    * [[floor]], with one difference: `pin` takes the value as the EXACT
+    * partition count of its exchange (a value below the input's split
+    * count still repartitions to that count), where [[floor]] takes it
+    * as a lower bound. */
   def pin(df: DataFrame, keys: Column*): DataFrame = {
+    val want = minParallelism(df)
+    if (want <= 0) df else df.repartition(want, keys: _*)
+  }
+
+  /** `spark.graft.scan.minParallelism`, else `defaultParallelism`. */
+  private def minParallelism(df: DataFrame): Int = {
     val s = df.sparkSession
-    val want = s.conf.getOption("spark.graft.scan.minParallelism") match {
+    s.conf.getOption("spark.graft.scan.minParallelism") match {
       case Some(v) =>
         try v.trim.toInt
         catch {
@@ -86,6 +86,5 @@ object Parallelism {
         }
       case None => s.sparkContext.defaultParallelism
     }
-    if (want <= 0) df else df.repartition(want, keys: _*)
   }
 }

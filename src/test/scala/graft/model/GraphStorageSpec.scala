@@ -2,8 +2,10 @@ package graft.model
 
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{JobCount, SparkSpec}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MetadataBuilder
 
 class GraphStorageSpec extends SparkSpec {
   import spark.implicits._
@@ -113,6 +115,98 @@ class GraphStorageSpec extends SparkSpec {
       .select("name", "change_type").as[(String, String)].collect().toMap
     assert(out == Map("i-1" -> "changed", "i-2" -> "removed",
       "i-3" -> "added"))
+  }
+
+  // ── Job-free reads: the schema comes from the committed footer ──────
+
+  /** The read path's schema must be the one Spark's inference job gives,
+    * exactly: names, types, nullability and field metadata. */
+  private def assertInferredSchema(read: DataFrame, dir: String): Unit =
+    assert(read.schema == spark.read.parquet(dir).schema,
+      s"footer schema differs from the inferred one under $dir")
+
+  private val vertexFrame = {
+    val doc = new MetadataBuilder().putString("comment", "vertex key").build()
+    Seq(("Service", "a", "healthy", 1L), ("Service", "b", "degraded", 2L))
+      .toDF("label", "name", "health_status", "last_updated")
+      .withColumn("name", col("name").as("name", doc))
+  }
+
+  test("readSnapshot resolves a version without running a Spark job") {
+    val root = Files.createTempDirectory("graftjobfree").toString
+    GraphStorage.commitSnapshot(vertexFrame, root)
+    GraphStorage.commitSnapshot(vertexFrame.limit(1), root)
+    val (latest, latestJobs) = JobCount(spark) {
+      GraphStorage.readSnapshot(spark, root)
+    }
+    val (_, pinnedJobs) = JobCount(spark) {
+      GraphStorage.readSnapshot(spark, root, Some(0L))
+    }
+    assert(latestJobs == 0 && pinnedJobs == 0)
+    assert(latest.count() == 1)
+  }
+
+  test("snapshot schema equals the inferred one: vertex store, all-null " +
+      "metrics, empty commit") {
+    val root = Files.createTempDirectory("graftfooter").toString
+    GraphStorage.commitSnapshot(vertexFrame, s"$root/vertices")
+    assertInferredSchema(GraphStorage.readSnapshot(spark, s"$root/vertices"),
+      s"$root/vertices/v=0")
+    assert(GraphStorage.readSnapshot(spark, s"$root/vertices").schema("name")
+      .metadata.getString("comment") == "vertex key")
+
+    // an edge store whose metric columns are null on every row
+    val edges = Seq(("Resource", "a", "DependsOn", "Resource", "b"))
+      .toDF("src_label", "src_name", "edge_label", "dst_label", "dst_name")
+      .select(col("*"), lit(null).cast("long").as("calls"),
+        lit(null).cast("double").as("avg_value"),
+        lit(null).cast("long").as("last_seen"))
+    GraphStorage.commitSnapshot(edges, s"$root/edges")
+    val back = GraphStorage.readSnapshot(spark, s"$root/edges")
+    assertInferredSchema(back, s"$root/edges/v=0")
+    assert(back.filter(col("calls").isNull && col("avg_value").isNull).count() == 1)
+
+    // a committed empty frame keeps its schema and reads 0 rows
+    GraphStorage.commitSnapshot(vertexFrame.limit(0), s"$root/empty")
+    val empty = GraphStorage.readSnapshot(spark, s"$root/empty")
+    assertInferredSchema(empty, s"$root/empty/v=0")
+    assert(empty.columns.toSeq == vertexFrame.columns.toSeq)
+    assert(empty.count() == 0)
+  }
+
+  test("a pinned older version keeps its schema after a schema-changing " +
+      "commit") {
+    val root = Files.createTempDirectory("graftdrift").toString
+    GraphStorage.commitSnapshot(vertexFrame, root)
+    GraphStorage.commitSnapshot(vertexFrame.drop("health_status")
+      .withColumn("first_seen", col("last_updated").cast("int")), root)
+    val old = GraphStorage.readSnapshot(spark, root, Some(0L))
+    assertInferredSchema(old, s"$root/v=0")
+    assert(old.columns.toSeq == vertexFrame.columns.toSeq)
+    assertInferredSchema(GraphStorage.readSnapshot(spark, root), s"$root/v=1")
+    assert(GraphStorage.readSnapshot(spark, root).columns.contains("first_seen"))
+  }
+
+  test("label-partitioned stores keep the inferred partition column") {
+    val dir = Files.createTempDirectory("graftpartfooter").toString
+    GraphStorage.writeVertices(vertexFrame, s"$dir/vertices")
+    assertInferredSchema(GraphStorage.readVertices(spark, s"$dir/vertices"),
+      s"$dir/vertices")
+    GraphStorage.writeEdges(Seq(("a", "Calls", "b", 3L))
+      .toDF("src_name", "edge_label", "dst_name", "calls"), s"$dir/edges")
+    val edges = GraphStorage.readEdges(spark, s"$dir/edges")
+    assertInferredSchema(edges, s"$dir/edges")
+    assert(edges.columns.last == "edge_label")
+  }
+
+  test("a committed version dir without a data file fails naming the dir") {
+    val root = Files.createTempDirectory("graftnodata").toString
+    val dir = new java.io.File(s"$root/v=0")
+    assert(dir.mkdirs() && new java.io.File(dir, "_SUCCESS").createNewFile())
+    assert(GraphStorage.versions(spark, root) == Seq(0L))
+    val e = intercept[IllegalStateException](
+      GraphStorage.readSnapshot(spark, root))
+    assert(e.getMessage.contains(s"$root/v=0"), e.getMessage)
   }
 
   test("bucketed tables make the key join shuffle-free") {
