@@ -1817,9 +1817,10 @@ object SparkEntry {
     //    is the q_hll_daily twin pattern: exact count + a
     //    within-tolerance boolean. Tolerance 15% ≈ 7× the worst
     //    measured relerr on this graph across the three SFs (2.1% /
-    //    0.45% / 0.27% at sf0.001/0.01/0.1 — tools/ApproxTriProbe); the
-    //    estimate is DETERMINISTIC (pure function of the input), so the
-    //    margin only guards testdata re-rolls, not run-to-run noise.
+    //    0.45% / 0.27% at sf0.001/0.01/0.1 — PERF.md "Approximate
+    //    triangles"); the estimate is DETERMINISTIC (pure function of
+    //    the input), so the margin only guards testdata re-rolls, not
+    //    run-to-run noise.
     //    Even-part subgraph (the q_label_prop sampling practice) keeps
     //    the twin's exact side lean in the bench; the full-graph
     //    accuracy + wall-time A/B lives in PERF.md.
@@ -2871,7 +2872,7 @@ object SparkEntry {
     //    pairs (dHash 0) sit at pHash Hamming EXACTLY 0 (a constant
     //    shift moves only the excluded DC coefficient);
     //    `phash_agrees`: every near-dup pair sits at pHash ≤ 16
-    //    (PhashProbe measured flip-pair max 8 at sf0.001/sf0.01;
+    //    (flip-pair max measured 8 at sf0.001/sf0.01;
     //    cross-group pairs concentrate at ~31.5 — 16 splits the two
     //    populations with 2× margin). A pHash regression (resample
     //    drift, DCT bug, bit-order change) flips a boolean and
@@ -3510,10 +3511,6 @@ object SparkEntry {
       Multimodal.attach(imageDedupPngs(s, dir), "doc_id", "png", "png")
         .as[Multimodal.MediaRow])
   }
-
-  /** Measurement access for [[graft.tools.PhashProbe]] only. */
-  private[graft] def imageDedupFpsForProbe(s: SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = imageDedupFps(s, dir)
 
   /** The synthesized RIFF/WAVE clips (doc_id, wav) behind
     * [[audioDedupFps]] — exposed separately so q_audio_neardup_filter

@@ -67,7 +67,8 @@ object Basket {
     * `flatten(transform(..., transform(slice)))` form ran interpreted
     * (HOFs never codegen) and materialized all C(k,2) pair structs per
     * basket row before exploding — measured ~20% faster on the sf0.1
-    * co-purchase expansion, identical pair multiset (tools/PairProbe). */
+    * co-purchase expansion (PERF.md, "Basket pair expansion"); BasketSpec
+    * "coPairs matches…" pins the identical pair multiset. */
   private def expandPairs(sets: DataFrame): DataFrame =
     sets
       .select(col("is"), posexplode(col("is")))

@@ -231,7 +231,8 @@ object Components {
       // only ever decreases toward it), so the star fixpoint's
       // min-label-per-component IS the original min node id, and
       // composing star(root-of-label) over label(node) reproduces
-      // [[connectedStar]]'s answer bit-for-bit (AdaptProbe-verified).
+      // [[connectedStar]]'s answer bit-for-bit (ComponentsSpec's
+      // union-find property test runs this path at minLabelRounds = 1).
       //
       // POINTER DOUBLING first (r19, guide §1.2 — remove passes): the
       // partial labels form a forest (label(v) < v or label(v) = v,

@@ -57,8 +57,8 @@ object ExactSpans {
     // Materialized ONCE: both sides of the pair self-join below (and
     // the df-cap's count+join pass) read these blocks — AQE does not
     // reuse identical sibling stages, so without the checkpoint the
-    // window-md5 explode evaluated twice (measured in JobProbe: ~2 s
-    // of task time over 5 single-task stages at sf0.1)
+    // window-md5 explode evaluated twice (measured ~2 s of task time
+    // over 5 single-task stages at sf0.1; OPTIMIZATION_r18.md)
     val grams0 = toks.filter(size(col("ws")) >= minTokens)
       .select(col("doc_id"), posexplode(expr(
         s"transform(sequence(0, size(ws) - $minTokens), " +

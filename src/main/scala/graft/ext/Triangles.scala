@@ -76,8 +76,8 @@ object Triangles {
 
     // recomputed from the canon checkpoint by each consumer — cheaper
     // than one more blocking checkpoint job (measured at sf0.1); one
-    // explode scan, not a unionAll of two projections (the q_kcore A/B,
-    // tools/KCoreProbe, measured the same shape ~12% faster)
+    // explode scan, not a unionAll of two projections (the q_kcore A/B
+    // recorded in commit fd08022 measured the same shape ~12% faster)
     val deg = canon.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
 

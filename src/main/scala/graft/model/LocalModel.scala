@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
   * [[graft.ext.Gram]].fitPca / IvfIndex k-bounded-collect precedent;
   * never data-sized frames).
   *
-  * Why (optimization guide §1/§2, measured with tools/JobProbe): the
+  * Why (optimization guide §1/§2; measured in PERF.md, Round 18): the
   * ANN training loops checkpoint a tiny centroid frame every round and
   * then broadcast it into the next round's join. Under AQE each
   * localCheckpoint is one job and EVERY broadcast exchange reading the

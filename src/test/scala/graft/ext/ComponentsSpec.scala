@@ -72,6 +72,14 @@ class ComponentsSpec extends SparkSpec {
       val star = Components.connectedStar(es.toDF("a", "b"), "a", "b")
         .as[(Long, Long)].collect().toMap
       assert(star == expected, s"trial $trial (star): $star != $expected")
+      // adaptive at its default budget, and at one min-label round so
+      // the contraction, pointer doubling and star fallback all run
+      Seq(8, 1).foreach { rounds =>
+        val adaptive = Components.connectedAdaptive(es.toDF("a", "b"), "a",
+          "b", minLabelRounds = rounds).as[(Long, Long)].collect().toMap
+        assert(adaptive == expected,
+          s"trial $trial (adaptive, $rounds rounds): $adaptive != $expected")
+      }
     }
   }
 
