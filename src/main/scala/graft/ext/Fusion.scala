@@ -38,6 +38,7 @@ object Fusion {
     scored.select(col(idCol), col(scoreCol))
       .orderBy(col(scoreCol).desc, col(idCol).asc)
       .limit(n)
+      // single-partition window over at most n rows (the limit above)
       .withColumn("rank", row_number().over(
         Window.orderBy(col(scoreCol).desc, col(idCol).asc)))
       .select(col(idCol), col("rank"))
@@ -61,6 +62,7 @@ object Fusion {
         sum(col("contrib")).as("rrf_micro"))
       .orderBy(col("rrf_micro").desc, col(idCol).asc)
       .limit(topN)
+      // single-partition window over at most topN rows (the limit above)
       .withColumn("rank", row_number().over(
         Window.orderBy(col("rrf_micro").desc, col(idCol).asc)))
   }

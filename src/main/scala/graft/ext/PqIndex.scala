@@ -124,6 +124,7 @@ object PqIndex {
     // same ids — deterministic and oracle-replayable with one CTE)
     val initIds = comp.select(col("vid"))
       .distinct().orderBy(col("vid")).limit(k)
+      // single-partition window over at most k rows (the limit above)
       .withColumn("cid", row_number().over(Window.orderBy(col("vid"))) - 1)
     // centroid frames are m·k·subDim rows by construction — localized
     // (driver-local relation, [[graft.model.LocalModel]]) instead of

@@ -144,8 +144,9 @@ object Triangles {
     * away reports no row at all); the estimator is meant for aggregate /
     * heavy-node readings. Global-sum relative error shrinks as
     * ~√((1/p³−1)/T) for T true triangles — see ApproxTrianglesSpec for
-    * the measured bounds and `SparkEntry.q_triangles_approx` for the
-    * estimate-vs-exact tolerance gate.
+    * the measured bounds and q_triangles_approx in
+    * `graft.queries.GraphQueries` for the estimate-vs-exact tolerance
+    * gate.
     *
     * @param keepBuckets edges kept ⇔ md5 bucket ∈ [0, keepBuckets) of
     *   [0, buckets), i.e. p = keepBuckets/buckets (default 8/16 = ½,

@@ -12,6 +12,9 @@ runs the matching SQL from oracle_sql.json in DuckDB against the raw
 testdata parquet in <sfDir>, sorts columns by name and rows by all columns,
 and compares cell values exactly (floats: exact bits after float64 cast).
 This is deliberately at-least-as-strict as the driver's hash compare.
+Every query carries an oracle, so a result dir with no oracle entry
+FAILs (NO-ORACLE); without a query filter, an oracle key with no result
+dir FAILs too (MISSING).
 """
 import json
 import math
@@ -23,12 +26,6 @@ import pyarrow.dataset as ds
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
-
-# Expected row counts for queries that intentionally have no SQL oracle.
-# Round 6 retired the last four (IVF -> exhaustive-probe identity oracle;
-# sketches -> exact-twin + tolerance-boolean oracles); kept as a mechanism
-# in case a future genuinely-oracle-free operator lands.
-NO_ORACLE_EXPECTED_ROWS = {}
 
 
 def norm(v):
@@ -61,6 +58,12 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
     n_pass = n_fail = 0
+    if only is None:
+        # an oracle key with no result dir is a query Verify never wrote
+        written = {d.name for d in Path(out_dir).iterdir() if d.is_dir()}
+        for name in sorted(set(oracle) - written):
+            print(f"  {name}: MISSING")
+            n_fail += 1
     for d in sorted(Path(out_dir).iterdir()):
         if not d.is_dir():
             continue
@@ -78,15 +81,9 @@ def main():
         s_cols = spark_tbl.column_names
         s_rows = [tuple(r[c] for c in s_cols) for r in spark_tbl.to_pylist()]
         if name not in oracle:
-            want = NO_ORACLE_EXPECTED_ROWS.get(name)
-            ok = len(s_rows) == want if want is not None else len(s_rows) > 0
-            print(f"  {name}: NO-ORACLE rows={len(s_rows)}"
-                  f"{f' expected={want}' if want is not None else ''} "
-                  f"({'PASS' if ok else 'FAIL'})")
-            if ok:
-                n_pass += 1
-            else:
-                n_fail += 1
+            # every registered query carries an oracle by type
+            print(f"  {name}: NO-ORACLE rows={len(s_rows)}")
+            n_fail += 1
             continue
         try:
             res = con.execute(oracle[name])
