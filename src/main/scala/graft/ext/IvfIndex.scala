@@ -46,20 +46,24 @@ object IvfIndex {
     def save(path: String): Unit = {
       val spark = assigned.sparkSession
       import spark.implicits._
+      val t = table(path)
       // disjoint-path writes overlapped (ConcurrentJobs wave-fan);
       // the manifest commit still strictly FOLLOWS all data
-      graft.model.ConcurrentJobs.awaitAll(
-        () => writeListsWave(assigned, path, wave = 0L, dynamic = false),
-        () => centroids.toSeq.map { case (i, c) => (i, c) }
-          .toDF("list_id", "centroid")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$path/centroids"))
-      // Some(-1): a rebuild resets compaction coverage
-      graft.model.WaveManifest.commit(spark, path, Seq(0L),
-        through = Some(-1L))
-      ()
+      t.build(spark) {
+        graft.model.ConcurrentJobs.awaitAll(
+          () => t.write(assigned, 0L, "lists", Seq("list_id"),
+            dynamic = false),
+          () => centroids.toSeq.map { case (i, c) => (i, c) }
+            .toDF("list_id", "centroid")
+            .coalesce(1).write.mode("overwrite")
+            .parquet(s"$path/centroids"))
+      }
     }
   }
+
+  /** The wave store under an index: `lists/` partitioned (batch,
+    * list_id), tombstones keyed by `vid`. */
+  private def table(path: String) = graft.model.WaveTable(path, Seq("lists"))
 
   /** Load a previously-saved index as a PINNED SNAPSHOT: the manifest
     * pointer is resolved HERE (driver-side, once), and `assigned`
@@ -75,30 +79,12 @@ object IvfIndex {
     val cents = spark.read.parquet(s"$path/centroids")
       .select(col("list_id").cast("int"), col("centroid"))
       .as[(Int, Array[Double])].collect()
-    val waves = version
-      .map(v => graft.model.WaveManifest.wavesAt(spark, path, v))
-      .orElse(graft.model.WaveManifest.pinned(spark, path))
-    // explicit pinned dirs, never a table-root scan: partition
-    // discovery on the root races a superseded compactor's orphan
-    // delete (WaveManifest.readWaves doc — the round-16 fix)
-    val lists = (waves match {
-      case Some(ws) =>
-        graft.model.WaveManifest.readWaves(spark, path, "lists", ws)
-      case None => spark.read.parquet(s"$path/lists")
-    }).drop("batch")
     // pinned tombstone waves (deleteSave) mask their ids — a handle
     // pinned BEFORE a delete keeps serving them (snapshot semantics,
-    // both directions; the IvfPq contract). No forced broadcast: the
-    // mask is unbounded over an index's lifetime, AQE broadcasts
-    // while small and compact() clears it to zero.
-    val masked = graft.model.WaveManifest
-      .sideTableWaves(spark, path, "tombs", waves)
-      .map(_.drop("batch")) match {
-      case Some(t) => lists.join(t.select(col("vid").as("__tvid"))
-          .distinct(), col("neighbor_id") === col("__tvid"), "left_anti")
-      case None => lists
-    }
-    IvfModel(masked, cents)
+    // both directions; the IvfPq contract)
+    val snap = table(path).read(spark,
+      version.map(v => graft.model.WaveManifest.wavesAt(spark, path, v)))
+    IvfModel(snap.live("lists", "neighbor_id"), cents)
   }
 
   /** Tombstone delete: the [[IvfPq.deleteSave]] contract on the dense
@@ -108,23 +94,8 @@ object IvfIndex {
     * physically removes masked rows and clears the tombstones;
     * re-inserting a deleted id stays masked until that compaction. */
   def deleteSave(path: String, ids: DataFrame, idCol: String,
-      wave: Long): Unit = {
-    require(wave != 0L, "wave 0 is the build wave; delete with a new id")
-    require(wave < graft.model.WaveManifest.CompactBase,
-      s"wave $wave is in the compaction id space (>= 2^60)")
-    val spark = ids.sparkSession
-    val through = graft.model.WaveManifest.compactedThrough(spark, path)
-    require(wave > through,
-      s"wave $wave is at or below the compaction watermark $through — " +
-        "a compaction absorbed that id; delete with a fresh id")
-    ids.select(col(idCol).cast("long").as("vid"))
-      .withColumn("batch", lit(wave))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch")
-      .parquet(s"$path/tombs")
-    graft.model.WaveManifest.commitWave(spark, path, wave)
-  }
+      wave: Long): Unit =
+    table(path).delete(ids, col(idCol).cast("long"), wave)
 
   /** Build the index: fit the coarse quantizer ONCE over the corpus and
     * assign every row its nearest list. One KMeans job + one transform.
@@ -249,20 +220,10 @@ object IvfIndex {
     * skipped when the wave is already pinned), so a model [[load]]ed
     * before the append keeps serving the pre-append snapshot. */
   def appendSave(path: String, assignedRows: DataFrame, wave: Long): Unit = {
-    require(wave != 0L, "wave 0 is the build wave; append with a new id")
-    require(wave < graft.model.WaveManifest.CompactBase,
-      s"wave $wave is in the compaction id space (>= 2^60) — append " +
-        "waves must stay below WaveManifest.CompactBase")
-    // below the compaction watermark = absorbed id: commitWave would
-    // skip it (replay protection) and the rows would silently vanish
-    // from serving — refuse loudly on the batch face
-    val through = graft.model.WaveManifest
-      .compactedThrough(assignedRows.sparkSession, path)
-    require(wave > through,
-      s"wave $wave is at or below the compaction watermark $through — " +
-        "a compaction absorbed that id; append with a fresh id")
-    writeListsWave(assignedRows, path, wave, dynamic = true)
-    graft.model.WaveManifest.commitWave(assignedRows.sparkSession, path, wave)
+    val t = table(path)
+    t.append(assignedRows.sparkSession, wave) {
+      t.write(assignedRows, wave, "lists", Seq("list_id"))
+    }
   }
 
   /** Compact the PINNED wave set into ONE new wave and re-pin the
@@ -270,47 +231,20 @@ object IvfIndex {
     * the dense index: N micro-batch waves × list dirs of small files
     * collapse to one wave. A pure row rewrite (vector rows are disjoint
     * across waves — the append precondition), so search over the
-    * compacted index is bit-identical (spec-pinned). Data first,
-    * manifest after; old waves remain for pinned readers until
-    * [[graft.model.WaveManifest.expire]]. Appends may race this
-    * compaction (CAS-retried commit keeps their waves —
-    * WaveRaceSpec); compactions must not race each other (shared
-    * rewrite target wave id).
+    * compacted index is bit-identical (spec-pinned). Tombstoned rows are
+    * PHYSICALLY removed here and the mask resets to empty. Old waves
+    * remain for pinned readers until [[expire]]. Appends and other
+    * compactions may race it ([[graft.model.WaveTable.compact]];
+    * WaveRaceSpec).
     * @return the new wave id */
   def compact(spark: SparkSession, path: String): Long =
-    // unique claimed rewrite id + CAS'd commit + superseded-loser retry
-    // (WaveManifest.runCompaction): appends racing this compaction keep
-    // their waves; compactions racing each other stay correct too
-    graft.model.WaveManifest.runCompaction(spark, path,
-        Seq("lists")) { (waves, newWave) =>
-      // materialized BEFORE the write (the rewrite scans the path it
-      // overwrites; Spark refuses the lazy form). Tombstoned rows are
-      // PHYSICALLY removed here and the mask resets to empty.
-      // Explicit pinned dirs (readWaves): a racing loser's orphan
-      // delete must not crash this rewrite's partition discovery.
-      val live = graft.model.WaveManifest
-        .readWaves(spark, path, "lists", waves).drop("batch")
-      val rows = (graft.model.WaveManifest
-          .sideTableWaves(spark, path, "tombs", Some(waves)) match {
-        case Some(t) =>
-          val tv = t.select(col("vid").as("__tvid")).distinct()
-          live.join(tv, col("neighbor_id") === col("__tvid"), "left_anti")
-        case None => live
-      }).localCheckpoint()
-      writeListsWave(rows, path, newWave, dynamic = true)
-    }
+    table(path).compactRows(spark, "lists", Seq("list_id"), "neighbor_id")
 
-  /** The single lists write path every persisted face shares ([[
-    * IvfModel.save]] wave 0 static, [[appendSave]] + [[graft.streaming
-    * .VectorIndexStream]] waves dynamic) — one layout, so the partition
-    * scheme cannot diverge between build, incremental, and streaming. */
-  private[graft] def writeListsWave(assignedRows: DataFrame, path: String,
-      wave: Long, dynamic: Boolean): Unit =
-    assignedRows.withColumn("batch", lit(wave))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
-      .partitionBy("batch", "list_id")
-      .parquet(s"$path/lists")
+  /** Retention: drop manifest versions below the newest `keepVersions`
+    * and every `lists`/`tombs` wave dir no surviving version references.
+    * @return the deleted wave ids */
+  def expire(spark: SparkSession, path: String, keepVersions: Int): Seq[Long] =
+    table(path).expire(spark, keepVersions)
 
   /** Assign each row its IVF list id (the build half, kept for callers
     * that only need the partitioning column). */

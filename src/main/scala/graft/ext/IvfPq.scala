@@ -266,7 +266,7 @@ object IvfPq {
       .select(col("qid"), col("cid").as("list_id"))
   }
 
-  // ── Persisted face: the WaveManifest snapshot discipline shared with
+  // ── Persisted face: the graft.model.WaveTable lifecycle shared with
   //    IvfIndex/PostingIndex/DedupState — codes land partitioned by
   //    (batch, list_id), serves resolve a manifest pin ONCE at load,
   //    appends are replay-idempotent dynamic wave overwrites, and
@@ -285,19 +285,23 @@ object IvfPq {
     * then a manifest commit pinning exactly {0} (a rebuild resets
     * compaction coverage). */
   def save(model: IvfPqModel, codes: DataFrame, path: String): Unit = {
+    val t = table(path)
     // the three writes land on disjoint paths — overlap them (the
     // ConcurrentJobs wave-fan contract); the manifest commit still
     // strictly FOLLOWS all data, so the publish ordering is unchanged
-    graft.model.ConcurrentJobs.awaitAll(
-      () => writeCodesWave(codes, path, wave = 0L, dynamic = false),
-      () => model.coarse.coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/coarse"),
-      () => model.pq.coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/pqcb"))
-    graft.model.WaveManifest.commit(codes.sparkSession, path, Seq(0L),
-      through = Some(-1L))
-    ()
+    t.build(codes.sparkSession) {
+      graft.model.ConcurrentJobs.awaitAll(
+        () => t.write(codes, 0L, "codes", Seq("list_id"), dynamic = false),
+        () => model.coarse.coalesce(1).write.mode("overwrite")
+          .parquet(s"$path/coarse"),
+        () => model.pq.coalesce(1).write.mode("overwrite")
+          .parquet(s"$path/pqcb"))
+    }
   }
+
+  /** The wave store under an index: `codes/` partitioned (batch,
+    * list_id), tombstones keyed by `vid`. */
+  private def table(path: String) = graft.model.WaveTable(path, Seq("codes"))
 
   /** Load as a PINNED SNAPSHOT: the manifest pointer resolves HERE
     * (driver-side, once) — waves appended after the load are invisible
@@ -325,48 +329,22 @@ object IvfPq {
     val subIdx = pq.schema.fieldIndex("sub")
     val model = IvfPqModel(coarse, pq,
       Some(1 + pqRows.iterator.map(_.getInt(subIdx)).max))
-    val waves = version
-      .map(v => graft.model.WaveManifest.wavesAt(spark, path, v))
-      .orElse(graft.model.WaveManifest.pinned(spark, path))
-    // explicit pinned dirs, never a table-root scan (WaveManifest
-    // .readWaves doc — the round-16 orphan-delete listing race)
-    val codes = (waves match {
-      case Some(ws) =>
-        graft.model.WaveManifest.readWaves(spark, path, "codes", ws)
-      case None => spark.read.parquet(s"$path/codes")
-    }).drop("batch")
-    // no forced broadcast: tombstone cardinality is unbounded over an
-    // index's lifetime — AQE broadcasts the anti join while it is
-    // small, and compaction ([[compact]]) clears it back to zero
-    val masked = graft.model.WaveManifest
-      .sideTableWaves(spark, path, "tombs", waves)
-      .map(_.drop("batch")) match {
-      case Some(t) => codes.join(t.select(col("vid").as("__tvid"))
-          .distinct(), col("vid") === col("__tvid"), "left_anti")
-      case None => codes
-    }
-    IvfPqDisk(model, masked)
+    val snap = table(path).read(spark,
+      version.map(v => graft.model.WaveManifest.wavesAt(spark, path, v)))
+    IvfPqDisk(model, snap.live("codes", "vid"))
   }
 
   /** On-disk insert: land [[encode]]d rows as their own `batch=<wave>`
     * partition wave — re-running the SAME wave id dynamically
     * overwrites that wave's partitions (crash/replay-idempotent), the
     * manifest commit lands AFTER the data, and absorbed-by-compaction
-    * ids are refused loudly. The [[IvfIndex.appendSave]] contract,
-    * verbatim, on the code table. */
+    * ids are refused loudly: [[graft.model.WaveTable.append]] on the
+    * code table. */
   def appendSave(path: String, encodedRows: DataFrame, wave: Long): Unit = {
-    require(wave != 0L, "wave 0 is the build wave; append with a new id")
-    require(wave < graft.model.WaveManifest.CompactBase,
-      s"wave $wave is in the compaction id space (>= 2^60) — append " +
-        "waves must stay below WaveManifest.CompactBase")
-    val through = graft.model.WaveManifest
-      .compactedThrough(encodedRows.sparkSession, path)
-    require(wave > through,
-      s"wave $wave is at or below the compaction watermark $through — " +
-        "a compaction absorbed that id; append with a fresh id")
-    writeCodesWave(encodedRows, path, wave, dynamic = true)
-    graft.model.WaveManifest.commitWave(encodedRows.sparkSession, path,
-      wave)
+    val t = table(path)
+    t.append(encodedRows.sparkSession, wave) {
+      t.write(encodedRows, wave, "codes", Seq("list_id"))
+    }
   }
 
   /** Tombstone delete: land the vids to remove as their OWN wave under
@@ -380,60 +358,26 @@ object IvfPq {
     * the masked codes and clears the tombstones); [[appendSave]] does
     * not check, the documented append-posture contract. */
   def deleteSave(path: String, ids: DataFrame, idCol: String,
-      wave: Long): Unit = {
-    require(wave != 0L, "wave 0 is the build wave; delete with a new id")
-    require(wave < graft.model.WaveManifest.CompactBase,
-      s"wave $wave is in the compaction id space (>= 2^60)")
-    val spark = ids.sparkSession
-    val through = graft.model.WaveManifest.compactedThrough(spark, path)
-    require(wave > through,
-      s"wave $wave is at or below the compaction watermark $through — " +
-        "a compaction absorbed that id; delete with a fresh id")
-    ids.select(col(idCol).cast("long").as("vid"))
-      .withColumn("batch", lit(wave))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch")
-      .parquet(s"$path/tombs")
-    graft.model.WaveManifest.commitWave(spark, path, wave)
-  }
+      wave: Long): Unit =
+    table(path).delete(ids, col(idCol).cast("long"), wave)
 
   /** Collapse the pinned wave set into ONE compaction-space wave and
     * re-pin — tombstoned codes are PHYSICALLY removed here (the
     * rewrite anti-joins the pinned tombstones), so post-compaction
     * serves are bit-identical to pre-compaction serves and the
     * tombstone mask resets to empty; data first, manifest after; old
-    * waves stay for pinned readers until
-    * [[graft.model.WaveManifest.expire]] (tables `codes` + `tombs`).
+    * waves stay for pinned readers until [[expire]].
     * @return the new wave id */
   def compact(spark: org.apache.spark.sql.SparkSession,
       path: String): Long =
-    // unique claimed rewrite id + CAS'd commit + superseded-loser retry
-    // (WaveManifest.runCompaction): appends racing this compaction keep
-    // their waves; compactions racing each other stay correct too
-    graft.model.WaveManifest.runCompaction(spark, path,
-        Seq("codes")) { (waves, newWave) =>
-      // explicit pinned dirs (readWaves): a racing loser's orphan
-      // delete must not crash this rewrite's partition discovery
-      val live = graft.model.WaveManifest
-        .readWaves(spark, path, "codes", waves).drop("batch")
-      val rows = (graft.model.WaveManifest
-          .sideTableWaves(spark, path, "tombs", Some(waves)) match {
-        case Some(t) =>
-          val tv = t.select(col("vid").as("__tvid")).distinct()
-          live.join(tv, col("vid") === col("__tvid"), "left_anti")
-        case None => live
-      }).localCheckpoint()
-      writeCodesWave(rows, path, newWave, dynamic = true)
-    }
+    table(path).compactRows(spark, "codes", Seq("list_id"), "vid")
 
-  private def writeCodesWave(codes: DataFrame, path: String, wave: Long,
-      dynamic: Boolean): Unit =
-    codes.withColumn("batch", lit(wave))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
-      .partitionBy("batch", "list_id")
-      .parquet(s"$path/codes")
+  /** Retention: drop manifest versions below the newest `keepVersions`
+    * and every `codes`/`tombs` wave dir no surviving version references.
+    * @return the deleted wave ids */
+  def expire(spark: org.apache.spark.sql.SparkSession, path: String,
+      keepVersions: Int): Seq[Long] =
+    table(path).expire(spark, keepVersions)
 
   /** [[adcTopK]] over a loaded index with STATIC partition pruning:
     * probe selection itself is DISTRIBUTED ([[probeFrame]] — the query

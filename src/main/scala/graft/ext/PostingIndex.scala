@@ -56,15 +56,11 @@ object PostingIndex {
     * pre-rebuild version fail on their next read — the documented
     * retention trade, same as any table format's VACUUM). */
   def build(docs: DataFrame, idCol: String, textCol: String,
-            path: String, termBuckets: Int = 64): Unit = {
-    writeWave(docs, idCol, textCol, path, wave = 0L, termBuckets,
-      dynamic = false)
-    // Some(-1): a rebuild RESETS compaction coverage — fresh index,
-    // every wave id is legal again
-    graft.model.WaveManifest.commit(docs.sparkSession, path, Seq(0L),
-      through = Some(-1L))
-    ()
-  }
+            path: String, termBuckets: Int = 64): Unit =
+    table(path).build(docs.sparkSession) {
+      writeWave(docs, idCol, textCol, path, wave = 0L, termBuckets,
+        dynamic = false)
+    }
 
   /** Fold a wave of NEW documents in without re-reading the indexed
     * corpus. `wave` must be unique per batch of docs (re-using a wave
@@ -74,23 +70,16 @@ object PostingIndex {
     * lands — a crash in between leaves an invisible wave the replay
     * overwrites. */
   def append(newDocs: DataFrame, idCol: String, textCol: String,
-             path: String, wave: Long, termBuckets: Int = 64): Unit = {
-    require(wave != 0L, "wave 0 is the build wave; append with a new id")
-    require(wave < graft.model.WaveManifest.CompactBase,
-      s"wave $wave is in the compaction id space (>= 2^60) — append " +
-        "waves must stay below WaveManifest.CompactBase")
-    // an id at or below the compaction watermark would be SKIPPED by
-    // commitWave (absorbed-replay protection) — silently losing fresh
-    // docs; a batch-face caller must get an error, not a drop
-    val through =
-      graft.model.WaveManifest.compactedThrough(newDocs.sparkSession, path)
-    require(wave > through,
-      s"wave $wave is at or below the compaction watermark $through — " +
-        "a compaction absorbed that id; append with a fresh id")
-    writeWave(newDocs, idCol, textCol, path, wave, termBuckets,
-      dynamic = true)
-    graft.model.WaveManifest.commitWave(newDocs.sparkSession, path, wave)
-  }
+             path: String, wave: Long, termBuckets: Int = 64): Unit =
+    table(path).append(newDocs.sparkSession, wave) {
+      writeWave(newDocs, idCol, textCol, path, wave, termBuckets,
+        dynamic = true)
+    }
+
+  /** The wave store under an index: four data tables, tombstones keyed
+    * by `doc_id`. */
+  private def table(path: String) = graft.model.WaveTable(path,
+    Seq("doclens", "postings", "terms", "stats"), tombKey = "doc_id")
 
   /** The single write path all faces share (build, append, streaming
     * micro-batches) — one tokenization feeding all four tables, so the
@@ -111,12 +100,8 @@ object PostingIndex {
     val toksPlan = docs.select(col(idCol).as("doc_id"),
       TextAnalysis.words(col(textCol)).as("ws"))
     val toks = if (dynamic) toksPlan else toksPlan.localCheckpoint()
-    def wv(df: DataFrame, table: String, parts: String*): Unit =
-      df.withColumn("batch", lit(wave))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
-        .partitionBy("batch" +: parts: _*)
-        .parquet(s"$path/$table")
+    def wv(df: DataFrame, name: String, parts: String*): Unit =
+      table(path).write(df, wave, name, parts, dynamic)
     // the four table writes are INDEPENDENT actions over the shared
     // checkpointed token scan — submit them concurrently (review r16
     // #3: a streamed wave paid six sequential job-scheduling
@@ -174,23 +159,8 @@ object PostingIndex {
     * minus the masked docs row-for-row; post-compaction serve ≡ a
     * fresh build on the survivors score-for-score. */
   def deleteSave(path: String, docIds: DataFrame, idCol: String,
-      wave: Long): Unit = {
-    require(wave != 0L, "wave 0 is the build wave; delete with a new id")
-    require(wave < graft.model.WaveManifest.CompactBase,
-      s"wave $wave is in the compaction id space (>= 2^60)")
-    val spark = docIds.sparkSession
-    val through = graft.model.WaveManifest.compactedThrough(spark, path)
-    require(wave > through,
-      s"wave $wave is at or below the compaction watermark $through — " +
-        "a compaction absorbed that id; delete with a fresh id")
-    docIds.select(col(idCol).as("doc_id"))
-      .withColumn("batch", lit(wave))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch")
-      .parquet(s"$path/tombs")
-    graft.model.WaveManifest.commitWave(spark, path, wave)
-  }
+      wave: Long): Unit =
+    table(path).delete(docIds, col(idCol), wave)
 
   /** BM25 scores for `terms` over the index — docs with ≥ 1 matching
     * term, columns (doc_id, dl, tf_0.., bm25) exactly as
@@ -208,19 +178,11 @@ object PostingIndex {
                  b: Double = 0.75,
                  pin: Option[Seq[Long]] = None): DataFrame = {
     require(terms.nonEmpty, "scoreQuery needs at least one term")
-    // plan-time pin: explicit > manifest pointer > legacy scan-all.
-    // Pinned reads go through EXPLICIT batch dirs (WaveManifest
-    // .readWaves) — a table-root scan's partition discovery races the
-    // transient dirs a superseded compactor deletes (the round-16
-    // compactor-race FileNotFoundException).
-    val waves = pin.orElse(graft.model.WaveManifest.pinned(spark, path))
-    def pinnedTable(table: String): DataFrame = waves match {
-      case Some(ws) =>
-        graft.model.WaveManifest.readWaves(spark, path, table, ws)
-      case None => spark.read.parquet(s"$path/$table")
-    }
+    // plan-time pin: explicit > manifest pointer > legacy scan-all,
+    // read as explicit pinned dirs (graft.model.WaveTable.read)
+    val snap = table(path).read(spark, pin)
     val lower = terms.map(_.toLowerCase(java.util.Locale.ROOT))
-    val post = pinnedTable("postings")
+    val post = snap("postings")
       .filter(col("bucket").isin(bucketsOf(lower, termBuckets): _*) &&
         col("term").isin(lower: _*))
     // per-doc tf columns in TERM ORDER (the fold order is the parity)
@@ -233,27 +195,22 @@ object PostingIndex {
     val withTf = lower.indices.foldLeft(byDoc) { (d, i) =>
       d.withColumn(s"tf_$i", coalesce(col(s"tf_raw_$i"), lit(0L)))
     }
-    val dls = pinnedTable("doclens")
+    val dls = snap("doclens")
       .select(col("doc_id"), col("dl"))
-    val stats = pinnedTable("stats")
+    val stats = snap("stats")
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
     // one (df_0..df_n) row, wave-summed; absent terms read as df 0 —
     // a lazy broadcast, not an eager collect (serve-time snapshot)
     val dfAggs = lower.indices.map(i =>
       coalesce(sum(when(col("term") === lower(i), col("df"))), lit(0.0))
         .as(s"df_$i"))
-    val dfRow = pinnedTable("terms")
+    val dfRow = snap("terms")
       .filter(col("term").isin(lower: _*))
       .agg(dfAggs.head, dfAggs.tail: _*)
     // Lucene-semantics delete mask: pinned tombstones hide their docs
     // from the RESULTS; df/stats above stay wave-summed (stale until
     // compaction) so surviving docs score identically pre/post delete
-    val masked = graft.model.WaveManifest.sideTableWaves(
-        spark, path, "tombs", waves) match {
-      case Some(t) => withTf.join(t.select(col("doc_id").as("__tdoc"))
-          .distinct(), col("doc_id") === col("__tdoc"), "left_anti")
-      case None => withTf
-    }
+    val masked = snap.masked(withTf, "doc_id")
     val joined = masked.join(dls, "doc_id")
       .crossJoin(broadcast(stats)).crossJoin(broadcast(dfRow))
     val dlNorm = col("dl").cast("double") / (col("sum_dl") / col("n_docs"))
@@ -285,9 +242,9 @@ object PostingIndex {
     * overwrite of its own partitions — a replayed compaction is
     * idempotent), the manifest flips after; a crash in between leaves
     * the old manifest serving the old waves. Old waves stay on disk for
-    * pinned readers until [[graft.model.WaveManifest.expire]] reclaims
-    * them. An append landing mid-compaction is SAFE: the commit is
-    * CAS'd against the pin-time version ([[graft.model.WaveManifest
+    * pinned readers until [[expire]] reclaims them. An append landing
+    * mid-compaction is SAFE: the commit is CAS'd against the pin-time
+    * version ([[graft.model.WaveManifest
     * .commitCompaction]]), so the racing wave survives into the new
     * snapshot. Compactions racing EACH OTHER are safe too: each claims
     * a unique rewrite wave id and the superseded loser redoes on fresh
@@ -295,8 +252,7 @@ object PostingIndex {
     * races all of it).
     * @return the new wave id */
   def compact(spark: SparkSession, path: String): Long =
-    graft.model.WaveManifest.runCompaction(spark, path,
-        Seq("doclens", "postings", "terms", "stats")) { (waves, newWave) =>
+    table(path).compact(spark) { (snap, newWave) =>
     // the new wave id comes from the DISJOINT compaction space (>= 2^60):
     // `waves.max + 1` was exactly the id the next micro-batch would use,
     // and its dynamic partition overwrite replaced the compacted wave's
@@ -304,12 +260,7 @@ object PostingIndex {
     // — the whole pre-compaction index vanished from serving (review r12)
     // materialized (localCheckpoint) BEFORE the write: the rewrite
     // reads the same table paths it overwrites, and Spark refuses a
-    // write whose lazy input scans its own output path. Explicit
-    // pinned dirs, not a root scan — a racing loser's orphan delete
-    // must not crash this rewrite's partition discovery.
-    def pinned(table: String) = graft.model.WaveManifest
-      .readWaves(spark, path, table, waves).drop("batch")
-      .localCheckpoint()
+    // write whose lazy input scans its own output path.
     // Lucene merge: tombstoned docs drop PHYSICALLY here, and df/stats
     // are RECOMPUTED from the survivors (the moment stale statistics
     // refresh). With no tombstones the recomputation equals the old
@@ -317,30 +268,26 @@ object PostingIndex {
     // count(postings per term) = Σ per-wave dfs and the doclens
     // count/sum = Σ per-wave stats — integer-valued doubles below
     // 2^53 (spec-pinned by WaveCompactionSpec's bit-identical serve).
-    val tv = graft.model.WaveManifest
-      .sideTableWaves(spark, path, "tombs", Some(waves))
-      .map(_.select(col("doc_id").as("__tdoc")).distinct())
-    def maskDocs(df: DataFrame): DataFrame = tv match {
-      case Some(t) =>
-        df.join(t, col("doc_id") === col("__tdoc"), "left_anti")
-      case None => df
-    }
-    def wv(df: DataFrame, table: String, parts: String*): Unit =
-      df.withColumn("batch", lit(newWave))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch" +: parts: _*)
-        .parquet(s"$path/$table")
-    val doclens = maskDocs(pinned("doclens")).localCheckpoint()
-    val postings = maskDocs(pinned("postings")).localCheckpoint()
+    def survivors(name: String) = snap.masked(
+      snap(name).drop("batch").localCheckpoint(), "doc_id").localCheckpoint()
+    def wv(df: DataFrame, name: String, parts: String*): Unit =
+      table(path).write(df, newWave, name, parts)
+    val doclens = survivors("doclens")
+    val postings = survivors("postings")
     wv(doclens, "doclens")
     wv(postings, "postings", "bucket")
     wv(postings.groupBy(col("term"))
       .agg(count(lit(1)).cast("double").as("df")), "terms")
     wv(doclens.agg(count(lit(1)).cast("double").as("n_docs"),
       sum(col("dl")).cast("double").as("sum_dl")), "stats")
-    // runCompaction commits: absorbed-coverage marker, CAS'd against
-    // the pin-time version, superseded-loser retry included
   }
+
+  /** Retention: drop manifest versions below the newest `keepVersions`
+    * and every wave dir of the four tables and `tombs` that no surviving
+    * version references.
+    * @return the deleted wave ids */
+  def expire(spark: SparkSession, path: String, keepVersions: Int): Seq[Long] =
+    table(path).expire(spark, keepVersions)
 
   /** The distinct posting buckets a term list touches — the mirror of
     * the build-side pmod(xxhash64(term, 42), termBuckets), computed

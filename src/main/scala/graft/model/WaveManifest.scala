@@ -2,11 +2,12 @@ package graft.model
 
 import org.apache.spark.sql.SparkSession
 
-/** Snapshot manifest for wave-layout indexes ([[graft.ext.PostingIndex]],
-  * [[graft.ext.IvfIndex]]) — the missing isolation piece their raw
-  * `batch=<wave>` parquet dirs cannot provide on their own: a serve that
-  * scans "whatever partitions exist" can catch a wave mid-commit and mix
-  * pre/post-append state across its table scans.
+/** Snapshot manifest for wave-layout stores — every wave store goes
+  * through [[WaveTable]], the one API over this manifest. It is the
+  * isolation piece their raw `batch=<wave>` parquet dirs cannot provide
+  * on their own: a serve that scans "whatever partitions exist" can
+  * catch a wave mid-commit and mix pre/post-append state across its
+  * table scans.
   *
   * The [[GraphStorage]] versioned-snapshot discipline, specialized to
   * wave sets: every commit writes an IMMUTABLE `_manifest/v=<n>` file
@@ -594,10 +595,7 @@ object WaveManifest {
       } catch {
         case e: CompactionSupersededException =>
           tables.foreach { t =>
-            val p =
-              if (t.isEmpty)
-                new org.apache.hadoop.fs.Path(root, s"batch=$newWave")
-              else new org.apache.hadoop.fs.Path(root, s"$t/batch=$newWave")
+            val p = waveDir(root, t, newWave)
             if (f.exists(p)) f.delete(p, true)
           }
           attempts += 1
@@ -644,7 +642,9 @@ object WaveManifest {
     * `<table>/batch=<w>` partition dir whose wave is referenced by NO
     * surviving version — the VACUUM for wave indexes ([[graft.ext
     * .PostingIndex.compact]]/[[graft.ext.IvfIndex.compact]] create the
-    * unreferenced waves this reclaims). Readers pinned to an expired
+    * unreferenced waves this reclaims; stores call it through
+    * [[WaveTable.expire]], which names every table, `tombs` included).
+    * Readers pinned to an expired
     * version fail on their next read — the same documented retention
     * trade as [[GraphStorage.expireSnapshots]]. Also reclaims
     * compaction claim markers at or below the pinned compaction
@@ -659,16 +659,18 @@ object WaveManifest {
     val f = fs(spark, root)
     expireWith(spark, root, keepVersions, w =>
       tables.forall { t =>
-        // an empty table name = single-table layout with `batch=<w>`
-        // dirs directly under the root (the StreamingNearDup survivor
-        // index); a "$t/batch=" child string would resolve "" to an
-        // ABSOLUTE "/batch=<w>" path — never touch that
-        val p =
-          if (t.isEmpty) new org.apache.hadoop.fs.Path(root, s"batch=$w")
-          else new org.apache.hadoop.fs.Path(root, s"$t/batch=$w")
+        val p = waveDir(root, t, w)
         !f.exists(p) || f.delete(p, true)
       })
   }
+
+  // `<table>/batch=<wave>` under the root. An empty table name = the
+  // single-table layout with `batch=<w>` dirs directly under the root
+  // (the StreamingNearDup survivor index); a "$t/batch=" child string
+  // would resolve "" to an ABSOLUTE "/batch=<w>" path — never touch that
+  private def waveDir(root: String, table: String, wave: Long) =
+    new org.apache.hadoop.fs.Path(root,
+      if (table.isEmpty) s"batch=$wave" else s"$table/batch=$wave")
 
   /** [[expire]]'s engine with the wave remover injected (specs drive the
     * deletion-failure path through this — a local FS delete essentially

@@ -44,7 +44,7 @@ object CountMinStream {
     * contract — every batch and every reader must agree on it.
     *
     * Batch dirs land at `base + epochId` with the run-scoped base from
-    * [[DedupState.resolveBase]]: a SECOND run against the same path
+    * [[WaveStream.storeBase]]: a SECOND run against the same path
     * with a fresh checkpoint restarts epoch ids at 0, and without the
     * base its overwrites of `batch=0..n` would silently clobber the
     * first run's cell tables — losing counts and breaking the
@@ -58,48 +58,28 @@ object CountMinStream {
       d: Int, w: Int, seed: Long = 42L,
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0
-  ): DataStreamWriter[Row] = {
-    val baseRef = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    stream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          if (baseRef.get == Long.MinValue)
-            baseRef.set(DedupState.resolveBase(spark, path,
-              DedupState.queryId(spark)))
-          val eff = baseRef.get + id
-          // a replay of a compaction-absorbed wave must be a no-op:
-          // its cells already live in the merged wave
-          if (!DedupState.absorbed(spark, path, eff)) {
-            DedupState.writeWave(
-              CountMin.sketch(batch, keyCol, d, w, seed), path, eff)
-            DedupState.commitAndMaybeCompact(spark, path, eff,
-              compactEvery, mergeCells)
-          }
-        }
-      }
-  }
+  ): DataStreamWriter[Row] =
+    WaveStream.maintain(stream, path, trigger, compactEvery, mergeCells)(
+      CountMin.sketch(_, keyCol, d, w, seed))
 
   /** The merged sketch over everything ingested so far — cell-wise sum
     * of the PINNED waves (manifest-less legacy stores scan every dir).
     * Kilobytes in, ≤ d·w rows out. */
   def rollup(spark: SparkSession, path: String): DataFrame =
-    DedupState.pinnedIndex(spark, path, None)
+    graft.model.WaveTable(path).read(spark)()
       .groupBy(col("i"), col("j"))
       .agg(sum(col("cnt")).as("cnt"))
 
   /** Collapse the pinned waves into one cell-merged compaction wave —
     * the small-files lifecycle; serving is invariant (cells add). */
   def compact(spark: SparkSession, path: String): Long =
-    DedupState.compactTable(spark, path, mergeCells)
+    graft.model.WaveTable(path).compactRows(spark, reduce = mergeCells)
 
   /** Retention: drop old manifest versions, reclaim unreferenced
     * `batch=` dirs. */
   def expire(spark: SparkSession, path: String,
       keepVersions: Int = 1): Seq[Long] =
-    DedupState.expireTable(spark, path, keepVersions)
+    graft.model.WaveTable(path).expire(spark, keepVersions)
 
   /** Point-frequency estimates against the merged persisted sketch. */
   def estimate(spark: SparkSession, path: String, keys: DataFrame,

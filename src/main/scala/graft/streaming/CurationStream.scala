@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -56,27 +54,18 @@ object CurationStream {
       termBuckets: Int = 64, shingleN: Int = 3, numHashes: Int = 12,
       bandSize: Int = 4, threshold: Double = 0.7,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val dedupBase = new AtomicLong(Long.MinValue)
-    val postBase = new AtomicLong(Long.MinValue)
+    val dedupBase = WaveStream.storeBase(dedupPath)
+    val postBase = WaveStream.indexBase(indexPath)
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         if (!batch.isEmpty) {
+          // run-scoped bases, resolved once on the first non-empty batch
           val spark = batch.sparkSession
-          // run-scoped bases, resolved once on the first non-empty
-          // batch (foreachBatch runs serially on the stream thread,
-          // where the queryId local property is set)
-          if (dedupBase.get == Long.MinValue)
-            dedupBase.set(DedupState.resolveBase(spark, dedupPath,
-              DedupState.queryId(spark)))
-          if (postBase.get == Long.MinValue)
-            postBase.set(DedupState.resolveBaseWith(spark, indexPath,
-              DedupState.queryId(spark),
-              DedupState.indexRunBase(spark, indexPath)))
           processBatch(batch, id, idCol, textCol, rowRules, dedupPath,
-            indexPath, dedupBase.get, postBase.get, quarantine,
+            indexPath, dedupBase(spark), postBase(spark), quarantine,
             onSurvivors, termBuckets, shingleN, numHashes, bandSize,
             threshold)
         }

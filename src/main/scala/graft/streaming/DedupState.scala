@@ -7,7 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared persistence discipline for per-batch accumulated dedup state —
-  * the single-table [[graft.model.WaveManifest]] wave layout that
+  * the single-table [[graft.model.WaveTable]] wave layout (`""` = waves
+  * directly under the root) that
   * [[StreamingNearDup]] (minhash survivor index) and
   * [[FingerprintDedupStream]] (63-bit fingerprint index) both ride, so
   * the snapshot/compaction/retention contract cannot diverge between
@@ -19,11 +20,12 @@ import org.apache.spark.sql.functions._
   *     data — a crash in between leaves an invisible wave the replay
   *     overwrites;
   *   - readers resolve the manifest pointer ONCE at plan time
-  *     ([[pinnedIndex]]) — a batch committing mid-read is invisible;
-  *   - [[compactTable]] collapses the pinned waves into one
-  *     compaction-space wave with the `#through=` watermark burning the
-  *     absorbed batch ids; [[graft.model.WaveManifest.expire]] (via the
-  *     empty-table-name layout) reclaims unreferenced waves;
+  *     ([[graft.model.WaveTable.read]]) — a batch committing mid-read
+  *     is invisible;
+  *   - [[graft.model.WaveTable.compactRows]] collapses the pinned waves
+  *     into one compaction-space wave with the `#through=` watermark
+  *     burning the absorbed batch ids; [[graft.model.WaveTable.expire]]
+  *     reclaims unreferenced waves;
   *   - run-scoped base offsets ([[resolveBase]]) map each streaming
   *     query's restarting epoch ids past everything already indexed —
   *     and past the compaction watermark, so absorbed ids stay burned
@@ -96,9 +98,13 @@ private[streaming] object DedupState {
     * Single-writer (one ingest stream per index), like the index. */
   def resolveBase(spark: SparkSession, indexPath: String,
       queryId: String): Long =
-    resolveBaseWith(spark, indexPath, queryId, math.max(
-      existingBatches(spark, indexPath).foldLeft(-1L)(math.max),
-      graft.model.WaveManifest.compactedThrough(spark, indexPath)) + 1L)
+    resolveBaseWith(spark, indexPath, queryId, storeRunBase(spark, indexPath))
+
+  /** [[resolveBase]]'s fresh base: one past every stream-space `batch=`
+    * dir and the compaction watermark. */
+  def storeRunBase(spark: SparkSession, indexPath: String): Long =
+    math.max(existingBatches(spark, indexPath).foldLeft(-1L)(math.max),
+      graft.model.WaveManifest.compactedThrough(spark, indexPath)) + 1L
 
   /** [[resolveBase]]'s marker discipline with the fresh-base rule
     * injected — the single-table rule above globs root `batch=` dirs,
@@ -139,16 +145,6 @@ private[streaming] object DedupState {
     math.max(0L, math.max(maxPinnedStreamWave(spark, path),
       graft.model.WaveManifest.compactedThrough(spark, path)))
 
-  /** The single wave write path (stream batches and [[compactTable]]):
-    * dynamic partition overwrite of `batch=<wave>` — a replay replaces
-    * its own partitions, every other wave is untouched. */
-  def writeWave(rows: DataFrame, indexPath: String, wave: Long): Unit =
-    rows.withColumn("batch", lit(wave))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch")
-      .parquet(indexPath)
-
   /** True when a compaction already ABSORBED this batch id — the replay
     * must be a complete no-op (its rows live in the compacted wave, and
     * downstream already received its output when it first committed). */
@@ -175,24 +171,26 @@ private[streaming] object DedupState {
       eff: Long): Option[DataFrame] = {
     val waves = corpusWaves(spark, indexPath, eff)
     if (waves.isEmpty) None
-    // explicit pinned dirs, not a root scan: partition discovery on
-    // the root races a compactor's orphan-dir delete (WaveManifest
-    // .readWaves doc — the round-16 listing race)
-    else Some(graft.model.WaveManifest.readWaves(
-      spark, indexPath, "", waves))
+    else Some(graft.model.WaveTable(indexPath).read(spark, Some(waves))())
   }
 
   /** Data landed for `eff` — make it visible (skipped on a replay of an
     * already-pinned wave), then auto-compact if the pinned wave count
     * reached `compactEvery` (> 0; same foreachBatch thread — the
-    * compactor never races ingest).
+    * compactor never races ingest). The compaction carries rows as a
+    * pure union by default (dedup-index rows are disjoint across waves:
+    * each doc entered exactly one batch); a store whose read face
+    * AGGREGATES across waves (the Count-Min cell tables, where (i, j)
+    * rows repeat per batch and serving sums them) passes `reduce` to
+    * merge rows in the rewrite — the answer is unchanged either way (the
+    * serve-side aggregate is associative), the compacted wave minimal.
     *
     * Legacy migration: when NO manifest exists yet, the first commit
     * seeds the pinned set with every pre-manifest `batch=` dir, not
     * just `eff` — a manifest pinning only the new wave would hide the
-    * accumulated corpus from [[corpusWaves]]/[[pinnedIndex]] from the
-    * next batch on, silently disabling cross-batch dedup against every
-    * legacy survivor. */
+    * accumulated corpus from [[corpusWaves]] and the pinned serve from
+    * the next batch on, silently disabling cross-batch dedup against
+    * every legacy survivor. */
   def commitAndMaybeCompact(spark: SparkSession, indexPath: String,
       eff: Long, compactEvery: Int,
       reduce: DataFrame => DataFrame = identity): Unit = {
@@ -203,66 +201,12 @@ private[streaming] object DedupState {
         ()
       } else graft.model.WaveManifest.commitWave(spark, indexPath, eff)
     } else graft.model.WaveManifest.commitWave(spark, indexPath, eff)
-    if (compactEvery > 0 &&
-      graft.model.WaveManifest.pinned(spark, indexPath)
-        .exists(_.size >= compactEvery)) {
-      compactTable(spark, indexPath, reduce)
+    val store = graft.model.WaveTable(indexPath)
+    if (store.compactDue(spark, compactEvery)) {
+      store.compactRows(spark, reduce = reduce)
       ()
     }
   }
-
-  /** The index as a PINNED SNAPSHOT — the serve face for external
-    * readers: manifest pointer resolved ONCE here at plan time, so a
-    * batch committing mid-read is invisible. `pin` overrides the
-    * pointer for time travel; a manifest-less legacy index scans every
-    * wave. */
-  def pinnedIndex(spark: SparkSession, indexPath: String,
-      pin: Option[Seq[Long]]): DataFrame = {
-    val waves = pin.orElse(
-      graft.model.WaveManifest.pinned(spark, indexPath))
-    waves match {
-      // explicit pinned dirs, not a root scan (readWaves doc)
-      case Some(ws) =>
-        graft.model.WaveManifest.readWaves(spark, indexPath, "", ws)
-      case None => spark.read.parquet(indexPath)
-    }
-  }
-
-  /** Collapse the pinned wave set into ONE compaction-space wave and
-    * re-pin — by default rows are carried as a pure union (dedup-index
-    * rows are disjoint across waves: each doc entered exactly one
-    * batch), so every later probe sees the identical corpus. Stores
-    * whose read face AGGREGATES across waves (the Count-Min cell
-    * tables, where (i, j) rows repeat per batch and serving sums them)
-    * pass `reduce` to merge rows during the rewrite — the answer is
-    * unchanged either way (the serve-side aggregate is associative);
-    * reducing just makes the compacted wave minimal. Data first,
-    * manifest after; old waves remain for pinned readers until expire.
-    * Appends may race this compaction (the commit is CAS'd against
-    * the pin-time version — racing waves survive); compactions must
-    * not race each other.
-    * @return the new wave id */
-  def compactTable(spark: SparkSession, indexPath: String,
-      reduce: DataFrame => DataFrame = identity): Long =
-    // unique claimed rewrite id + CAS'd commit + superseded-loser retry
-    // (WaveManifest.runCompaction): a wave another committer lands
-    // mid-compaction survives; compactions racing each other stay
-    // correct too ("" = waves directly under the root)
-    graft.model.WaveManifest.runCompaction(spark, indexPath,
-        Seq("")) { (waves, newWave) =>
-      val rows = reduce(graft.model.WaveManifest
-        .readWaves(spark, indexPath, "", waves).drop("batch"))
-        .localCheckpoint() // the rewrite scans the path it overwrites
-      writeWave(rows, indexPath, newWave)
-    }
-
-  /** Retention: drop old manifest versions and reclaim every `batch=`
-    * dir no surviving version references — [[graft.model.WaveManifest
-    * .expire]] over the single-table layout (batch dirs directly under
-    * the root). */
-  def expireTable(spark: SparkSession, indexPath: String,
-      keepVersions: Int): Seq[Long] =
-    graft.model.WaveManifest.expire(spark, indexPath, Seq(""), keepVersions)
 
   /** The shared drop policy on oriented (doc_a < doc_b) near-dup pairs:
     * a batch doc drops when it is the LARGER side of any pair (its

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -98,7 +96,7 @@ object FingerprintDedupStream {
     // a −1 "fingerprint" matches nothing and must not accumulate
     val survivorFps = batchFps.filter(col(fpCol) >= 0L)
       .join(dropped, Seq(idCol), "left_anti")
-    DedupState.writeWave(survivorFps, indexPath, eff)
+    graft.model.WaveTable(indexPath).write(survivorFps, eff)
     DedupState.commitAndMaybeCompact(spark, indexPath, eff, compactEvery)
     onDuplicates(pairs, eff)
     onSurvivors(survivors, eff)
@@ -108,18 +106,18 @@ object FingerprintDedupStream {
     * external readers; `pin` overrides the pointer for time travel. */
   def index(spark: SparkSession, indexPath: String,
       pin: Option[Seq[Long]] = None): DataFrame =
-    DedupState.pinnedIndex(spark, indexPath, pin)
+    graft.model.WaveTable(indexPath).read(spark, pin)()
 
   /** Collapse the pinned wave set into ONE compaction-space wave.
     * @return the new wave id */
   def compact(spark: SparkSession, indexPath: String): Long =
-    DedupState.compactTable(spark, indexPath)
+    graft.model.WaveTable(indexPath).compactRows(spark)
 
   /** Retention — reclaim every wave dir no surviving manifest version
     * references. */
   def expire(spark: SparkSession, indexPath: String,
       keepVersions: Int): Seq[Long] =
-    DedupState.expireTable(spark, indexPath, keepVersions)
+    graft.model.WaveTable(indexPath).expire(spark, keepVersions)
 
   /** @param docs        STREAMING frame of raw media rows (idCol + the
     *                    columns `fingerprint` consumes)
@@ -145,20 +143,9 @@ object FingerprintDedupStream {
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0
   ): DataStreamWriter[Row] = {
-    val baseRef = new AtomicLong(Long.MinValue)
-    docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          if (baseRef.get == Long.MinValue)
-            baseRef.set(DedupState.resolveBase(spark, indexPath,
-              DedupState.queryId(spark)))
-          processBatch(batch, fingerprint, idCol, fpCol, indexPath,
-            maxHamming, baseRef.get + id, onSurvivors, onDuplicates,
-            compactEvery)
-        }
-      }
+    WaveStream.eachBatch(docs, indexPath, trigger) { (batch, eff) =>
+      processBatch(batch, fingerprint, idCol, fpCol, indexPath,
+        maxHamming, eff, onSurvivors, onDuplicates, compactEvery)
+    }
   }
 }

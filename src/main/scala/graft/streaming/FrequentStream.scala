@@ -39,55 +39,36 @@ object FrequentStream {
       capacity: Int,
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0
-  ): DataStreamWriter[Row] = {
-    // run-scoped base (DedupState.resolveBase): a second fresh-
-    // checkpoint run must append new dirs, not clobber batch=0..n
-    val baseRef = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    stream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          if (baseRef.get == Long.MinValue)
-            baseRef.set(DedupState.resolveBase(spark, summaryPath,
-              DedupState.queryId(spark)))
-          val eff = baseRef.get + id
-          if (!DedupState.absorbed(spark, summaryPath, eff)) {
-            // one aggregate over the batch; the buffer-sized result
-            // rides through sliceSummaries' grouped path on a constant
-            // key
-            DedupState.writeWave(
-              FrequentItems.sliceSummaries(
-                  batch.withColumn("_slice", lit(1)), Seq("_slice"),
-                  itemCol, capacity)
-                .drop("_slice")
-                .coalesce(1),
-              summaryPath, eff)
-            DedupState.commitAndMaybeCompact(spark, summaryPath, eff,
-              compactEvery)
-          }
-        }
-      }
-  }
+  ): DataStreamWriter[Row] =
+    // run-scoped base (WaveStream.storeBase): a second fresh-checkpoint
+    // run must append new dirs, not clobber batch=0..n
+    WaveStream.maintain(stream, summaryPath, trigger, compactEvery) {
+      // one aggregate over the batch; the buffer-sized result rides
+      // through sliceSummaries' grouped path on a constant key
+      batch => FrequentItems.sliceSummaries(
+          batch.withColumn("_slice", lit(1)), Seq("_slice"),
+          itemCol, capacity)
+        .drop("_slice")
+        .coalesce(1)
+    }
 
   /** Small-files lifecycle: carry the pinned summary ROWS into one
     * compaction wave (summaries stay per-batch rows — MG merging
     * happens at read in [[candidates]], so compaction only bounds the
     * directory count) and reclaim old dirs with [[expire]]. */
   def compact(spark: SparkSession, summaryPath: String): Long =
-    DedupState.compactTable(spark, summaryPath)
+    graft.model.WaveTable(summaryPath).compactRows(spark)
 
   def expire(spark: SparkSession, summaryPath: String,
       keepVersions: Int = 1): Seq[Long] =
-    DedupState.expireTable(spark, summaryPath, keepVersions)
+    graft.model.WaveTable(summaryPath).expire(spark, keepVersions)
 
   /** Merged candidates over everything ingested so far:
     * (item, lb, total) — summary-only, raw events never re-read. */
   def candidates(spark: SparkSession, summaryPath: String,
       capacity: Int): DataFrame =
     FrequentItems.rollupCandidates(
-      DedupState.pinnedIndex(spark, summaryPath, None)
+      graft.model.WaveTable(summaryPath).read(spark)()
         .select(col("total"), col("items")),
       Nil, capacity)
 
@@ -100,7 +81,7 @@ object FrequentStream {
       s"shareDen=$shareDen needs capacity+1 > ${2 * shareDen} to cover " +
         "the cross-batch merge bound")
     val cand = candidates(spark, summaryPath, capacity)
-    val total = DedupState.pinnedIndex(spark, summaryPath, None)
+    val total = graft.model.WaveTable(summaryPath).read(spark)()
       .agg(coalesce(sum(col("total")), lit(0L))).head().getLong(0)
     FrequentItems.exactFromCandidates(archive, itemCol, shareDen, total,
       cand.select(col("item").as(itemCol)))

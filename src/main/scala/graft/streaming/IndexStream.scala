@@ -18,7 +18,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * postings. Nothing merges in place, nothing renames: every batch's
   * data is immutable once its trigger commits, which is also what
   * makes the wave layout compaction-friendly later
-  * ([[graft.sources.CorpusLayout]] owns that job).
+  * ([[graft.ext.PostingIndex.compact]] owns that job, run inline at
+  * `compactEvery`).
   *
   * Precondition (the [[graft.ext.PostingIndex.append]] posture): doc
   * ids must be new across batches — re-ingesting an indexed doc
@@ -32,13 +33,10 @@ object IndexStream {
     * the maintenance loop — same single foreachBatch thread, so the
     * compactor never races ingest).
     *
-    * Epoch ids are offset by a RUN-SCOPED base ([[DedupState
-    * .resolveBaseWith]] with [[DedupState.indexRunBase]] — one slot
-    * past every pinned stream wave and the compaction watermark): a
-    * second run with a fresh checkpoint restarts epoch ids at 0, and
-    * without the base its dynamic overwrites would clobber the first
-    * run's waves 1..n. A checkpoint RESTART keeps its marker-recorded
-    * base, preserving replay idempotence.
+    * Epoch ids are offset by a RUN-SCOPED base ([[WaveStream.indexBase]]
+    * — one slot past every pinned stream wave and the compaction
+    * watermark), so a second run with a fresh checkpoint cannot
+    * clobber the first run's waves.
     *
     * One-time migration hazard, now DETECTED (advice/VERDICT r14 #7):
     * a checkpoint created BEFORE the run-scoped mapping replays its
@@ -55,22 +53,11 @@ object IndexStream {
     * the zero-risk migration. */
   def start(docs: DataFrame, idCol: String, textCol: String,
             path: String, checkpoint: String,
-            termBuckets: Int = 64, compactEvery: Int = 0): StreamingQuery = {
-    val baseRef =
-      new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        if (baseRef.get == Long.MinValue)
-          baseRef.set(DedupState.resolveBaseWith(spark, path,
-            DedupState.queryId(spark),
-            DedupState.indexRunBase(spark, path)))
-        appendBatchGuarded(batch, idCol, textCol, path, id, baseRef.get,
-          termBuckets, compactEvery)
-      }
-      .start()
-  }
+            termBuckets: Int = 64, compactEvery: Int = 0): StreamingQuery =
+    WaveStream.start(docs, path, checkpoint) { (batch, id, base) =>
+      appendBatchGuarded(batch, idCol, textCol, path, id, base,
+        termBuckets, compactEvery)
+    }
 
   /** [[appendBatch]] under the run-scoped base, with the pre-upgrade
     * double-land detection described on [[start]]. Public so specs can
@@ -116,43 +103,28 @@ object IndexStream {
       old.join(ids, Seq("doc_id"), "left_anti").limit(1).count() == 0L
   }
 
-  /** One wave under `batch=<batchId + 1>` with dynamic partition
-    * overwrite (replay-idempotent) — DELEGATES to the index's single
-    * shared write path ([[graft.ext.PostingIndex.writeWave]]), so the
-    * bucket layout and tf semantics cannot diverge between the batch,
-    * incremental, and streaming faces (review r11 finding). The `+ 1`
-    * mirrors [[VectorIndexStream]]: epoch ids start at 0, so a stream
-    * aimed at an index created by [[graft.ext.PostingIndex.build]]
-    * would otherwise land its first batch ON the build wave — the
-    * dynamic overwrite clobbers the built doclens/terms/stats
-    * partitions and commitWave silently skips the already-pinned wave 0
-    * (review r12, medium). The manifest commit lands AFTER the data
-    * wave (and is skipped on a replay of an already-pinned wave), so a
-    * concurrent [[graft.ext.PostingIndex.scoreQuery]] serve pins either
-    * the pre- or post-batch snapshot — never a mix. Public so specs can
-    * drive replays directly. */
+  /** One wave under `batch=<batchId + 1>` — the [[WaveStream
+    * .appendBatch]] step over [[graft.ext.PostingIndex.append]], the
+    * index's single write path, so the bucket layout and tf semantics
+    * cannot diverge between the batch, incremental, and streaming faces
+    * (review r11 finding). The `+ 1` mirrors [[VectorIndexStream]]:
+    * epoch ids start at 0, so a stream aimed at an index created by
+    * [[graft.ext.PostingIndex.build]] would otherwise land its first
+    * batch ON the build wave — the dynamic overwrite clobbers the built
+    * doclens/terms/stats partitions and commitWave silently skips the
+    * already-pinned wave 0 (review r12, medium). The manifest commit
+    * lands AFTER the data wave (and is skipped on a replay of an
+    * already-pinned wave), so a concurrent [[graft.ext.PostingIndex
+    * .scoreQuery]] serve pins either the pre- or post-batch snapshot —
+    * never a mix. Public so specs can drive replays directly. */
   def appendBatch(batch: DataFrame, idCol: String, textCol: String,
                   path: String, batchId: Long, termBuckets: Int,
-                  compactEvery: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val wave = batchId + 1
-    // a replayed batch whose wave a compaction already ABSORBED must
-    // be a complete no-op: its docs live in the compacted wave, and
-    // re-landing the data would only create an unreferenced dirty dir
-    // (and re-committing it would double-count — commitWave refuses,
-    // but skipping the write too keeps the layout clean)
-    if (wave <= graft.model.WaveManifest.compactedThrough(spark, path))
-      return
-    graft.ext.PostingIndex.writeWave(batch, idCol, textCol, path,
-      wave = wave, termBuckets, dynamic = true)
-    graft.model.WaveManifest.commitWave(spark, path, wave)
-    if (compactEvery > 0 &&
-      graft.model.WaveManifest.pinned(spark, path)
-        .exists(_.size >= compactEvery)) {
-      graft.ext.PostingIndex.compact(spark, path)
-      ()
+                  compactEvery: Int = 0): Unit =
+    WaveStream.appendBatch(batch, path, batchId + 1, compactEvery,
+        graft.ext.PostingIndex.compact) {
+      graft.ext.PostingIndex.append(batch, idCol, textCol, path,
+        batchId + 1, termBuckets)
     }
-  }
 
   /** Serve the streamed index — [[graft.ext.PostingIndex.scoreQuery]]
     * verbatim; the wave layout needs no serving changes. */

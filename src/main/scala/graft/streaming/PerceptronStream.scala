@@ -33,7 +33,7 @@ object PerceptronStream {
     * carrying `yCol` and `xCols`.
     *
     * Chain positions are `base + epochId` with a run-scoped base
-    * ([[DedupState.resolveBaseWith]]) set to the HIGHEST pinned wave:
+    * ([[WaveStream.RunBase]]) set to the HIGHEST pinned wave:
     * a fresh-checkpoint run therefore READS the previous chain's final
     * weights as its starting state (warm continuation) and extends the
     * chain above everything pinned — without the base, its epoch ids
@@ -44,17 +44,12 @@ object PerceptronStream {
     * replay idempotence. */
   def start(features: DataFrame, yCol: String, xCols: Seq[String],
             path: String, checkpoint: String): StreamingQuery = {
-    val baseRef =
-      new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+    val base = new WaveStream.RunBase(path,
+      s => math.max(0L, DedupState.maxPinnedStreamWave(s, path)))
     features.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        if (baseRef.get == Long.MinValue)
-          baseRef.set(DedupState.resolveBaseWith(spark, path,
-            DedupState.queryId(spark),
-            math.max(0L, DedupState.maxPinnedStreamWave(spark, path))))
-        appendBatch(batch, yCol, xCols, path, baseRef.get + id)
+        appendBatch(batch, yCol, xCols, path, base(batch.sparkSession) + id)
       }
       .start()
   }
@@ -78,15 +73,11 @@ object PerceptronStream {
     val w0 = weightsAt(spark, path, batchId, xCols.size + 1)
     val w1 = graft.ext.Perceptron.round(batch, yCol, xCols, w0)
     import spark.implicits._
-    w1.toSeq.zipWithIndex.map { case (v, j) => (j, v) }
-      .toDF("j", "w")
-      .withColumn("batch", lit(batchId + 1))
-      .coalesce(1)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch")
-      .parquet(s"$path/weights")
-    graft.model.WaveManifest.commitWave(spark, path, batchId + 1)
+    val weights = graft.model.WaveTable(path, Seq("weights"))
+    weights.append(spark, batchId + 1) {
+      weights.write(w1.toSeq.zipWithIndex.map { case (v, j) => (j, v) }
+        .toDF("j", "w").coalesce(1), batchId + 1, "weights")
+    }
   }
 
   /** The weights of a specific wave (zeros when the wave is absent —

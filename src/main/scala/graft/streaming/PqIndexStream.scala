@@ -33,61 +33,35 @@ object PqIndexStream {
   /** Start the maintenance query. `vectors` is a STREAMING frame with
     * (idCol, vecCol); `path` must hold a saved IVF-PQ index.
     * `compactEvery > 0` auto-compacts when the pinned wave count
-    * reaches it (same foreachBatch thread — never races ingest). */
+    * reaches it (same foreachBatch thread — never races ingest). Epoch
+    * ids are offset by the run-scoped [[WaveStream.indexBase]]. */
   def start(vectors: DataFrame, idCol: String, vecCol: String,
             path: String, checkpoint: String,
-            compactEvery: Int = 0): StreamingQuery = {
-    // run-scoped base (DedupState.indexRunBase): a fresh-checkpoint
-    // second run must slot past the first run's pinned waves, not
-    // clobber them — see IndexStream.start for the full contract
-    val baseRef =
-      new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        if (baseRef.get == Long.MinValue)
-          baseRef.set(DedupState.resolveBaseWith(spark, path,
-            DedupState.queryId(spark),
-            DedupState.indexRunBase(spark, path)))
-        appendBatch(batch, idCol, vecCol, path, baseRef.get + id,
-          compactEvery)
-      }
-      .start()
-  }
+            compactEvery: Int = 0): StreamingQuery =
+    WaveStream.start(vectors, path, checkpoint) { (batch, id, base) =>
+      appendBatch(batch, idCol, vecCol, path, base + id, compactEvery)
+    }
 
-  /** One wave under `batch=<batchId + 1>` — encode with the loaded
-    * model's codebooks (the same coarse-routing + residual-assignment
-    * rule every other face applies) and DELEGATE to [[graft.ext.IvfPq
-    * .appendSave]], the single shared write path, so layout and code
-    * choice cannot diverge between batch, incremental, and streaming
-    * writers. Public so specs can drive replays directly. */
+  /** One wave under `batch=<batchId + 1>` — the [[WaveStream
+    * .appendBatch]] step: encode with the loaded model's codebooks (the
+    * same coarse-routing + residual-assignment rule every other face
+    * applies) and DELEGATE to [[graft.ext.IvfPq.appendSave]], the
+    * single shared write path, so layout and code choice cannot diverge
+    * between batch, incremental, and streaming writers. The step's
+    * empty-batch skip also keeps an idle trigger away from encode, which
+    * refuses an empty frame (loud by design on the batch face). Public
+    * so specs can drive replays directly. */
   def appendBatch(batch: DataFrame, idCol: String, vecCol: String,
                   path: String, batchId: Long,
-                  compactEvery: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val wave = batchId + 1
-    // absorbed-replay no-op: after an auto-compaction the replayed
-    // batch's codes already live in the compacted wave
-    if (wave <= graft.model.WaveManifest.compactedThrough(spark, path))
-      return
-    // idle-trigger no-op: encode refuses an empty frame (loud by
-    // design on the batch face), and an empty wave has nothing to
-    // commit — skipping leaves a gap in the wave ids, which the
-    // manifest is explicitly fine with
-    if (batch.isEmpty) return
-    val model = graft.ext.IvfPq.load(spark, path).model
-    graft.ext.IvfPq.appendSave(path,
-      graft.ext.IvfPq.encode(batch, idCol, vecCol, model)
-        .localCheckpoint(),
-      wave)
-    if (compactEvery > 0 &&
-      graft.model.WaveManifest.pinned(spark, path)
-        .exists(_.size >= compactEvery)) {
-      graft.ext.IvfPq.compact(spark, path)
-      ()
+                  compactEvery: Int = 0): Unit =
+    WaveStream.appendBatch(batch, path, batchId + 1, compactEvery,
+        graft.ext.IvfPq.compact) {
+      val model = graft.ext.IvfPq.load(batch.sparkSession, path).model
+      graft.ext.IvfPq.appendSave(path,
+        graft.ext.IvfPq.encode(batch, idCol, vecCol, model)
+          .localCheckpoint(),
+        batchId + 1)
     }
-  }
 
   /** Serve the streamed index: a fresh pinned snapshot + the standard
     * pruned ADC probe — no serving changes, the wave layout's point. */

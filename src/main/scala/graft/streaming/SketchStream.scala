@@ -29,7 +29,7 @@ object SketchStream {
 
   /** Maintain a per-`keys` sketch of `valCol` at `sketchPath`, one
     * bucket-count partition per micro-batch — at `base + epochId` with
-    * the run-scoped base from [[DedupState.resolveBase]], so a second
+    * the run-scoped base from [[WaveStream.storeBase]], so a second
     * fresh-checkpoint run appends new dirs instead of clobbering the
     * first run's `batch=0..n` (the [[CountMinStream.maintain]]
     * hazard). */
@@ -40,27 +40,9 @@ object SketchStream {
       sketchPath: String,
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0
-  ): DataStreamWriter[Row] = {
-    val baseRef = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    stream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          if (baseRef.get == Long.MinValue)
-            baseRef.set(DedupState.resolveBase(spark, sketchPath,
-              DedupState.queryId(spark)))
-          val eff = baseRef.get + id
-          if (!DedupState.absorbed(spark, sketchPath, eff)) {
-            DedupState.writeWave(
-              Quantiles.sketch(batch, keys, valCol), sketchPath, eff)
-            DedupState.commitAndMaybeCompact(spark, sketchPath, eff,
-              compactEvery)
-          }
-        }
-      }
-  }
+  ): DataStreamWriter[Row] =
+    WaveStream.maintain(stream, sketchPath, trigger, compactEvery)(
+      Quantiles.sketch(_, keys, valCol))
 
   /** Quantiles over everything ingested so far: rollup-merge of the
     * PINNED waves (kilobytes; legacy stores scan every dir), then the
@@ -70,16 +52,16 @@ object SketchStream {
   def quantiles(spark: SparkSession, sketchPath: String, keys: Seq[String],
       qs: Seq[(String, Int, Int)]): DataFrame =
     Quantiles.estimate(
-      Quantiles.rollup(DedupState.pinnedIndex(spark, sketchPath, None)
+      Quantiles.rollup(graft.model.WaveTable(sketchPath).read(spark)()
         .drop("batch"), keys), keys, qs)
 
   /** Small-files lifecycle: collapse the pinned waves into one
     * compaction wave (bucket counts ADD — the serve answer is
     * invariant) and reclaim old dirs with [[expire]]. */
   def compact(spark: SparkSession, sketchPath: String): Long =
-    DedupState.compactTable(spark, sketchPath)
+    graft.model.WaveTable(sketchPath).compactRows(spark)
 
   def expire(spark: SparkSession, sketchPath: String,
       keepVersions: Int = 1): Seq[Long] =
-    DedupState.expireTable(spark, sketchPath, keepVersions)
+    graft.model.WaveTable(sketchPath).expire(spark, keepVersions)
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -38,10 +36,6 @@ import graft.ext.Dedup
   * ([[DedupState.droppedIds]]).
   */
 object StreamingNearDup {
-
-  private[streaming] def existingBatches(
-      spark: SparkSession, indexPath: String): Seq[Long] =
-    DedupState.existingBatches(spark, indexPath)
 
   private[streaming] def resolveBase(spark: SparkSession, indexPath: String,
       queryId: String): Long =
@@ -132,7 +126,7 @@ object StreamingNearDup {
     // rewriting both waves byte-identically under the same eff.
     graft.model.ConcurrentJobs.awaitAll(
       () => {
-        DedupState.writeWave(survivorIdx, indexPath, eff)
+        graft.model.WaveTable(indexPath).write(survivorIdx, eff)
         DedupState.commitAndMaybeCompact(spark, indexPath, eff,
           compactEvery)
       },
@@ -147,20 +141,20 @@ object StreamingNearDup {
     * corpus); `pin` overrides the pointer for time travel. */
   def index(spark: SparkSession, indexPath: String,
       pin: Option[Seq[Long]] = None): DataFrame =
-    DedupState.pinnedIndex(spark, indexPath, pin)
+    graft.model.WaveTable(indexPath).read(spark, pin)()
 
   /** Collapse the pinned wave set into ONE compaction-space wave —
     * survivor rows are disjoint across waves (each doc survived exactly
     * one batch), so every later probe sees the identical corpus.
     * @return the new wave id */
   def compact(spark: SparkSession, indexPath: String): Long =
-    DedupState.compactTable(spark, indexPath)
+    graft.model.WaveTable(indexPath).compactRows(spark)
 
   /** Retention for the survivor index — reclaim every wave dir no
     * surviving manifest version references. */
   def expire(spark: SparkSession, indexPath: String,
       keepVersions: Int): Seq[Long] =
-    DedupState.expireTable(spark, indexPath, keepVersions)
+    graft.model.WaveTable(indexPath).expire(spark, keepVersions)
 
   /** @param indexPath  corpus index location (parquet; created on first
     *                    batch if absent)
@@ -186,23 +180,10 @@ object StreamingNearDup {
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0
   ): DataStreamWriter[Row] = {
-    // resolved on the run's first non-empty batch, then cached for the
-    // run: foreachBatch executes serially on the stream's execution
-    // thread, where Spark sets the sql.streaming.queryId local property
-    val baseRef = new AtomicLong(Long.MinValue)
-    docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          if (baseRef.get == Long.MinValue)
-            baseRef.set(resolveBase(spark, indexPath,
-              DedupState.queryId(spark)))
-          processBatch(batch, idCol, textCol, indexPath, shingleN,
-            numHashes, bandSize, threshold, baseRef.get + id,
-            onSurvivors, onDuplicates, compactEvery)
-        }
-      }
+    // the run-scoped base resolves on the run's first non-empty batch
+    WaveStream.eachBatch(docs, indexPath, trigger) { (batch, eff) =>
+      processBatch(batch, idCol, textCol, indexPath, shingleN, numHashes,
+        bandSize, threshold, eff, onSurvivors, onDuplicates, compactEvery)
+    }
   }
 }

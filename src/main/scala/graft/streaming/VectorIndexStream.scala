@@ -30,57 +30,32 @@ object VectorIndexStream {
   /** Start the maintenance query. `vectors` is a STREAMING frame with
     * (idCol, vecCol); `path` must hold a saved index (the quantizer).
     * `compactEvery > 0` auto-compacts when the pinned wave count
-    * reaches it (same foreachBatch thread — never races ingest). */
+    * reaches it (same foreachBatch thread — never races ingest). Epoch
+    * ids are offset by the run-scoped [[WaveStream.indexBase]]. */
   def start(vectors: DataFrame, idCol: String, vecCol: String,
             path: String, checkpoint: String,
-            compactEvery: Int = 0): StreamingQuery = {
-    // run-scoped base (DedupState.indexRunBase): a fresh-checkpoint
-    // second run must slot past the first run's pinned waves, not
-    // clobber them — see IndexStream.start for the full contract
-    val baseRef =
-      new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        if (baseRef.get == Long.MinValue)
-          baseRef.set(DedupState.resolveBaseWith(spark, path,
-            DedupState.queryId(spark),
-            DedupState.indexRunBase(spark, path)))
-        appendBatch(batch, idCol, vecCol, path, baseRef.get + id,
-          compactEvery)
-      }
-      .start()
-  }
+            compactEvery: Int = 0): StreamingQuery =
+    WaveStream.start(vectors, path, checkpoint) { (batch, id, base) =>
+      appendBatch(batch, idCol, vecCol, path, base + id, compactEvery)
+    }
 
-  /** One wave under `batch=<batchId + 1>` — DELEGATES to the index's
-    * single shared write path ([[graft.ext.IvfIndex.writeListsWave]])
+  /** One wave under `batch=<batchId + 1>` — the [[WaveStream
+    * .appendBatch]] step over the index's single write path ([[graft
+    * .ext.IvfIndex.appendSave]], i.e. [[graft.model.WaveTable.append]])
     * and assignment rule ([[graft.ext.IvfIndex.assignTo]], the same
     * argmin/tie/NaN discipline as every probe face), so the layout and
     * list choice cannot diverge between batch, incremental, and
     * streaming writers. Public so specs can drive replays directly. */
   def appendBatch(batch: DataFrame, idCol: String, vecCol: String,
                   path: String, batchId: Long,
-                  compactEvery: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val wave = batchId + 1
-    // absorbed-replay no-op (see IndexStream.appendBatch): after an
-    // auto-compaction, the replayed batch's rows already live in the
-    // compacted wave
-    if (wave <= graft.model.WaveManifest.compactedThrough(spark, path))
-      return
-    val model = graft.ext.IvfIndex.load(spark, path)
-    graft.ext.IvfIndex.writeListsWave(
-      graft.ext.IvfIndex.assignTo(model, batch, idCol, vecCol),
-      path, wave, dynamic = true)
-    graft.model.WaveManifest.commitWave(spark, path, wave)
-    if (compactEvery > 0 &&
-      graft.model.WaveManifest.pinned(spark, path)
-        .exists(_.size >= compactEvery)) {
-      graft.ext.IvfIndex.compact(spark, path)
-      ()
+                  compactEvery: Int = 0): Unit =
+    WaveStream.appendBatch(batch, path, batchId + 1, compactEvery,
+        graft.ext.IvfIndex.compact) {
+      val model = graft.ext.IvfIndex.load(batch.sparkSession, path)
+      graft.ext.IvfIndex.appendSave(path,
+        graft.ext.IvfIndex.assignTo(model, batch, idCol, vecCol),
+        batchId + 1)
     }
-  }
 
   /** Serve the streamed index: a fresh pinned [[graft.ext.IvfIndex
     * .load]] snapshot + the standard pruned probe — no serving changes,

@@ -50,4 +50,24 @@ class QueryBudgetSpec extends SparkSpec {
         s"$name: $ran jobs, $shuffles shuffle exchanges")
     }
   }
+
+  // Queries that write a wave index while they build. Their save fans run
+  // on pooled `ConcurrentJobs` threads, outside this thread's job group,
+  // so they are counted with [[Profile.measure]], whose fences span every
+  // thread: construction plus the count, after one warm-up.
+  private val waveBudgets = Seq(
+    "q_bm25_append" -> (33, 4),
+    "q_ann_ivf_append" -> (18, 2),
+    "q_ann_ivfpq_delete" -> (60, 7))
+
+  waveBudgets.foreach { case (name, (jobs, exchanges)) =>
+    test(s"$name: job and shuffle-exchange budget (all threads)") {
+      val run = Profile.measure(spark, name, SparkEntry.queries(name)(_, sfDir),
+        warmups = 1)
+      assert(run.ok, s"$name failed: ${run.error}")
+      val ran = (run.jobs.size, run.planCounts.map(_.exchanges).getOrElse(-1))
+      assert(ran == ((jobs, exchanges)),
+        s"$name: ${ran._1} jobs, ${ran._2} shuffle exchanges")
+    }
+  }
 }

@@ -81,16 +81,46 @@ class IvfPqDeleteSpec extends SparkSpec {
 
   test("expire reclaims absorbed code AND tombstone waves") {
     val data = mkData(97)
-    val path = freshPath()
-    build(data, path)
-    IvfPq.deleteSave(path, Seq(2L).toDF("vec_id"), "vec_id", wave = 1L)
-    val before = neighbors(path, data.filter($"vec_id" === 0L))
-    IvfPq.compact(spark, path)
-    graft.model.WaveManifest.expire(spark, path,
-      tables = Seq("codes", "tombs"), keepVersions = 1)
-    assert(!new java.io.File(s"$path/codes/batch=0").exists())
-    assert(!new java.io.File(s"$path/tombs/batch=1").exists())
-    assert(neighbors(path, data.filter($"vec_id" === 0L)) === before)
+    val q = data.filter($"vec_id" === 0L)
+    val docs = (0L until 8L).map(i => (i, s"spark wave doc$i"))
+      .toDF("doc_id", "text")
+    // each index's own retention face (delete → compact → expire): a
+    // table list that left out `tombs` would orphan its dirs
+    final case class Face(data: String, build: String => Unit,
+        delete: String => Unit, compact: String => Long,
+        expire: String => Seq[Long], serve: String => Set[Long])
+    val faces = Seq(
+      Face("codes", p => { build(data, p); () },
+        IvfPq.deleteSave(_, Seq(2L).toDF("vec_id"), "vec_id", wave = 1L),
+        IvfPq.compact(spark, _), IvfPq.expire(spark, _, keepVersions = 1),
+        neighbors(_, q)),
+      Face("lists",
+        IvfIndex.buildSign(data, "vec_id", "embedding", bits = 2).save(_),
+        IvfIndex.deleteSave(_, Seq(2L).toDF("vec_id"), "vec_id", wave = 1L),
+        IvfIndex.compact(spark, _), IvfIndex.expire(spark, _, keepVersions = 1),
+        p => IvfIndex.search(IvfIndex.load(spark, p), q, "vec_id",
+          "embedding", k = 100, nProbe = 4)
+          .select("neighbor_id").as[Long].collect().toSet),
+      Face("postings",
+        PostingIndex.build(docs, "doc_id", "text", _, termBuckets = 4),
+        PostingIndex.deleteSave(_, Seq(2L).toDF("doc_id"), "doc_id", wave = 1L),
+        PostingIndex.compact(spark, _),
+        PostingIndex.expire(spark, _, keepVersions = 1),
+        p => PostingIndex.scoreQuery(spark, p, Seq("spark"), termBuckets = 4)
+          .select("doc_id").as[Long].collect().toSet))
+    faces.foreach { f =>
+      val path = freshPath()
+      f.build(path)
+      f.delete(path)
+      val before = f.serve(path)
+      f.compact(path)
+      f.expire(path)
+      assert(!new java.io.File(s"$path/${f.data}/batch=0").exists(), f.data)
+      val tombs = new java.io.File(s"$path/tombs")
+      assert(Option(tombs.list()).forall(!_.exists(_.startsWith("batch="))),
+        s"${f.data}: tombstone dirs survived expire")
+      assert(f.serve(path) === before, f.data)
+    }
   }
 
   test("the documented re-insert contract: masked until compaction, " +

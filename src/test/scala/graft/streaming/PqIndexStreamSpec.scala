@@ -119,6 +119,27 @@ class PqIndexStreamSpec extends SparkSpec {
       "vec_id", "embedding", path, 0L)
     assert(graft.model.WaveManifest.pinned(spark, path) === before)
     assert(IvfPq.load(spark, path).codes.count() > 0)
+    // the posting and dense index streams take the same step: an idle
+    // trigger commits no wave, writes no dir, and at compactEvery
+    // triggers no compaction
+    val vecPath = Files.createTempDirectory("vecstream-empty").toString
+    graft.ext.IvfIndex.buildSign(data.toDF("vec_id", "embedding"),
+      "vec_id", "embedding", bits = 2).save(vecPath)
+    val postPath = Files.createTempDirectory("poststream-empty").toString
+    graft.ext.PostingIndex.build(Seq((1L, "spark stream")).toDF("doc_id",
+      "text"), "doc_id", "text", postPath, termBuckets = 4)
+    (0L to 1L).foreach { id =>
+      VectorIndexStream.appendBatch(
+        Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding"),
+        "vec_id", "embedding", vecPath, id, compactEvery = 2)
+      IndexStream.appendBatch(Seq.empty[(Long, String)].toDF("doc_id",
+        "text"), "doc_id", "text", postPath, id, 4, compactEvery = 2)
+    }
+    Seq(vecPath, postPath).foreach { p =>
+      assert(graft.model.WaveManifest.versions(spark, p) === Seq(0L), p)
+      assert(graft.model.WaveManifest.pinned(spark, p) === Some(Seq(0L)), p)
+    }
+    assert(!new java.io.File(s"$postPath/stats/batch=1").exists())
   }
 
   test("a batch arriving AFTER an auto-compaction keeps every " +
