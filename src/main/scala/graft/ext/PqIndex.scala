@@ -152,9 +152,9 @@ object PqIndex {
     * cqs[i] = the i-th live cid's component at that pos, null when that
     * (sub, cid) cluster emptied out (a Lloyd's update emits no rows for
     * a memberless cluster, uniformly across the sub's positions).
-    * Collected driver-side: centroid frames are k·dim-bounded
-    * LocalRelations on every internal path, where collect() is
-    * executeCollect — no job ([[Coreset.assign]]'s exemplar frame is
+    * Collected driver-side by [[graft.model.LocalModel.boundedCollect]]:
+    * centroid frames are k·dim-bounded LocalRelations on every internal
+    * path, collected with no job ([[Coreset.assign]]'s exemplar frame is
     * the one data-derived caller: its collect is one k·D-row scan job
     * that replaces the broadcast build the former shape paid anyway).
     * cid may be INT (PQ/k-means codes) or LONG (exemplar vector ids);
@@ -163,8 +163,8 @@ object PqIndex {
     * live cid list the argmin unrolls over. */
   private def centPivot(cent: DataFrame, emptyMsg: String)
       : (DataFrame, Seq[Long]) = {
-    val rows = cent.select(col("cid").cast("long").as("cid"), col("pos"),
-      col("cq")).collect()
+    val rows = graft.model.LocalModel.boundedCollect(cent.select(
+      col("cid").cast("long").as("cid"), col("pos"), col("cq")))
     require(rows.nonEmpty, emptyMsg)
     val cids = rows.map(_.getLong(0)).distinct.sorted.toSeq
     val data: Seq[org.apache.spark.sql.Row] =

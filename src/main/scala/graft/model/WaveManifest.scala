@@ -653,9 +653,12 @@ object WaveManifest {
     * grows, so a reclaimed id can never be re-bid; markers ABOVE the
     * watermark stay, they are the crash-safety lock for in-flight
     * compactions. Single-committer contract, like every write face.
-    * Returns the deleted wave ids. */
-  def expire(spark: SparkSession, root: String, tables: Seq[String],
-      keepVersions: Int): Seq[Long] = {
+    * Returns the deleted wave ids. Package-private: the table list is
+    * trusted, and one that leaves out `tombs` orphans the tombstone
+    * dirs of an index with deletes — outside the package, retention
+    * goes through the index faces. */
+  private[model] def expire(spark: SparkSession, root: String,
+      tables: Seq[String], keepVersions: Int): Seq[Long] = {
     val f = fs(spark, root)
     expireWith(spark, root, keepVersions, w =>
       tables.forall { t =>

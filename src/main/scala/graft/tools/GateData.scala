@@ -3,21 +3,22 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** COMPLETE sf1-equivalent testdata for the CORRECTNESS gate — where
-  * [[ScaleProbe]] synthesizes only the tables its timing probes read,
-  * this writes all ten tables with full schemas, so `graft.Verify` +
-  * the DuckDB oracle can hash-gate the whole query surface one decade
-  * above the driver's largest SF (VERDICT r14 #3: "the hash gate stops
-  * at sf0.1; scaling evidence at sf1 is timing-only").
+/** COMPLETE sf1-equivalent testdata: all ten tables with full schemas,
+  * so `graft.Verify` + the DuckDB oracle can hash-gate the whole query
+  * surface one decade above the driver's largest SF (VERDICT r14 #3:
+  * "the hash gate stops at sf0.1; scaling evidence at sf1 is
+  * timing-only"), and so `graft.tools.Profile` run at the base dir and
+  * at this one reads each query's decade ratio (the sf1 scale check).
   *
-  * Same disjointness discipline as ScaleProbe (the measured-not-guessed
-  * rules that keep ×10 data from becoming ×100 work):
+  * The disjointness discipline (the measured-not-guessed rules that
+  * keep ×10 data from becoming ×100 work):
   *   - documents: replica k word-prefixes text with `r<k>q` (k=0
   *     verbatim) — shingle/minhash/vocab universes stay disjoint;
   *     doc_id offsets are multiples of 10⁶ so `% 10` splits hold;
   *   - supplier/part/customer names: DOUBLED-digit prefix `r<k><k>q`
   *     (single digits differ by one char — a cross-replica dist-1
-  *     edit-pair bomb, measured ×12.7 in ScaleProbe);
+  *     edit-pair bomb, measured as ×12.7 edit-distance pair rows
+  *     instead of ×10 on the supplier shards);
   *   - keys shift per replica (orderkeys ×10⁷, entity keys ×10⁶) with
   *     MATCHING offsets across tables, so every foreign-key
   *     relationship holds shard-locally;
@@ -53,9 +54,8 @@ object GateData {
   }
 
   /** Every table this generator can write — the `only` subset is
-    * validated against it so a typo fails fast instead of writing a
-    * partial dir that still carries the `_GATEDATA_SUBSET` marker
-    * (which tells ScaleProbe to trust the dir as-is; review r18). */
+    * validated against it so a typo fails fast, before any table is
+    * written, instead of leaving a partial dir behind. */
   private val AllTables = Set("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
@@ -149,14 +149,5 @@ object GateData {
       t.select((col("vec_id") + lit(k * 1000000L)).as("vec_id"),
         vec.as("embedding"), col("label"))
     }, "embeddings")
-    // a SUBSET dir is not a full gate set — drop a marker so ScaleProbe
-    // uses it as-is instead of clobbering it with its own generation
-    // (its gate-dir detection keys on tables a subset may omit)
-    if (only.nonEmpty) {
-      val m = new java.io.File(s"$out/_GATEDATA_SUBSET")
-      m.getParentFile.mkdirs()
-      m.createNewFile()
-      ()
-    }
   }
 }

@@ -20,7 +20,8 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExc
   * 3 reaches the JIT steady state of Bench's min-of-3), then one timed
   * pass of construction plus the `count()` Bench times, executed as
   * `groupBy().count()` (the plan `Dataset.count()` runs) so that the
-  * final AQE plan of that run can be counted, and printed with `--plan`.
+  * final AQE plan of that run can be counted, and printed with `--plan`;
+  * the count itself is reported as `rows`.
   * A listener folds every job and stage between two fence jobs: all
   * jobs, not one job group, because pooled `ConcurrentJobs` threads keep
   * the job group of the thread that created them. `idle_share` near 1
@@ -34,10 +35,10 @@ object Profile {
       scans: Int, generates: Int, aqeShuffleReads: Int)
 
   final case class Run(query: String, error: Option[String], wallS: Double,
-      cores: Int, jobs: Seq[JobStat], stages: Seq[StageStat], tasks: Int,
-      taskMs: Long, gcMs: Long, shuffleReadBytes: Long, shuffleReadRecords: Long,
-      shuffleWriteBytes: Long, shuffleWriteRecords: Long, spillBytes: Long,
-      plan: Option[SparkPlan]) {
+      rows: Option[Long], cores: Int, jobs: Seq[JobStat], stages: Seq[StageStat],
+      tasks: Int, taskMs: Long, gcMs: Long, shuffleReadBytes: Long,
+      shuffleReadRecords: Long, shuffleWriteBytes: Long, shuffleWriteRecords: Long,
+      spillBytes: Long, plan: Option[SparkPlan]) {
     def ok: Boolean = error.isEmpty
     def idleShare: Double = 1.0 - taskMs / 1e3 / (wallS * cores)
     def planCounts: Option[PlanCounts] = plan.map(Profile.planCounts)
@@ -51,7 +52,8 @@ object Profile {
         kv.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
       def arr(xs: Seq[String]) = xs.mkString("[", ",", "]")
       obj("query" -> str(query), "ok" -> ok, "error" -> error.fold("null")(str),
-        "wall_s" -> num(wallS), "jobs" -> jobs.size, "stages" -> stages.size,
+        "wall_s" -> num(wallS), "rows" -> rows.fold("null")(_.toString),
+        "jobs" -> jobs.size, "stages" -> stages.size,
         "tasks" -> tasks, "task_s" -> num(taskMs / 1e3), "gc_s" -> num(gcMs / 1e3),
         "shuffle_read_bytes" -> shuffleReadBytes,
         "shuffle_read_records" -> shuffleReadRecords,
@@ -190,16 +192,19 @@ object Profile {
       runFence()
       val t0 = System.nanoTime()
       val counted =
-        try { val c = build(spark).groupBy().count(); c.collect(); Right(c) }
-        catch { case e: Throwable => Left(e.getClass.getName) }
+        try {
+          val c = build(spark).groupBy().count()
+          Right((c, c.collect().head.getLong(0)))
+        } catch { case e: Throwable => Left(e.getClass.getName) }
       val wall = (System.nanoTime() - t0) / 1e9
       runFence()
       if (!rec.closed.await(60, TimeUnit.SECONDS))
         throw new IllegalStateException("listener never saw the closing fence job")
-      Run(name, counted.left.toOption, wall, sc.defaultParallelism,
+      Run(name, counted.left.toOption, wall, counted.toOption.map(_._2),
+        sc.defaultParallelism,
         rec.jobs.values.toSeq, rec.stages.toSeq, rec.tasks, rec.taskMs, rec.gcMs,
         rec.readBytes, rec.readRecords, rec.writeBytes, rec.writeRecords, rec.spill,
-        counted.toOption.map(_.queryExecution.executedPlan))
+        counted.toOption.map(_._1.queryExecution.executedPlan))
     } finally sc.removeSparkListener(rec)
   }
 

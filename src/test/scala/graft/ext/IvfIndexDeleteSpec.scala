@@ -55,8 +55,7 @@ class IvfIndexDeleteSpec extends SparkSpec {
       .filter(col("batch").isin(pinnedWaves.map(Long.box): _*))
     assert(raw.filter(col("neighbor_id") === victim).count() === 0L)
     // expire reclaims both the absorbed lists wave and the tombstones
-    graft.model.WaveManifest.expire(spark, path,
-      tables = Seq("lists", "tombs"), keepVersions = 1)
+    IvfIndex.expire(spark, path, keepVersions = 1)
     assert(!new java.io.File(s"$path/tombs/batch=1").exists())
     assert(neighbors(path, q) === after)
   }

@@ -10,7 +10,7 @@ import scala.util.Random
 /** Wave compaction + retention for both manifest-pinned indexes: N
   * micro-batch waves collapse to one (small-files lifecycle), serving
   * is bit-identical across the swap, old waves survive for pinned
-  * readers until `WaveManifest.expire` reclaims them.
+  * readers until the index's `expire` reclaims them.
   */
 class WaveCompactionSpec extends SparkSpec {
   import spark.implicits._
@@ -59,8 +59,7 @@ class WaveCompactionSpec extends SparkSpec {
     assert(v2 === Seq(0L, 1L, 2L))
     assert(serveRows(path, pin = Some(v2)) === before)
     // retention: keep only the latest manifest version → waves 0-2 go
-    val deleted = WaveManifest.expire(spark, path,
-      Seq("postings", "doclens", "terms", "stats"), keepVersions = 1)
+    val deleted = PostingIndex.expire(spark, path, keepVersions = 1)
     assert(deleted === Seq(0L, 1L, 2L))
     Seq("postings", "doclens", "terms", "stats").foreach { t =>
       assert(waveDirs(path, t) === Seq(s"batch=$newWave"),
@@ -96,7 +95,7 @@ class WaveCompactionSpec extends SparkSpec {
     assert(run() == before && before.nonEmpty)
     val loaded = IvfIndex.load(spark, path)
     assert(loaded.assigned.count() == 60L)
-    WaveManifest.expire(spark, path, Seq("lists"), keepVersions = 1)
+    IvfIndex.expire(spark, path, keepVersions = 1)
     assert(waveDirs(path, "lists") === Seq(s"batch=$newWave"))
     assert(run() == before)
   }

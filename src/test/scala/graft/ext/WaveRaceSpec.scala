@@ -174,8 +174,6 @@ class WaveRaceSpec extends SparkSpec {
     val docs = (1 to 8).map(i => (i.toLong, s"term$i spark common"))
     PostingIndex.build(Seq(docs.head).toDF("doc_id", "text"), "doc_id",
       "text", path, termBuckets = 4)
-    val tables = Seq("doclens", "postings", "terms", "stats")
-
     val appender = () => docs.zipWithIndex.drop(1).foreach { case (d, i) =>
       PostingIndex.append(Seq(d).toDF("doc_id", "text"), "doc_id",
         "text", path, wave = i.toLong, termBuckets = 4)
@@ -183,12 +181,11 @@ class WaveRaceSpec extends SparkSpec {
     }
     val expirer = () => (1 to 4).foreach { _ =>
       Thread.sleep(30)
-      graft.model.WaveManifest.expire(spark, path, tables,
-        keepVersions = 1)
+      PostingIndex.expire(spark, path, keepVersions = 1)
       ()
     }
     race(Seq(appender, expirer))
-    graft.model.WaveManifest.expire(spark, path, tables, keepVersions = 1)
+    PostingIndex.expire(spark, path, keepVersions = 1)
 
     val pinned = graft.model.WaveManifest.pinned(spark, path).get
     val served = PostingIndex

@@ -29,7 +29,7 @@ class ProfileSpec extends SparkSpec {
   test("job count equals JobCount's; one stage entry per completed stage") {
     Seq("q_topology", "q_anti_gc").foreach { name =>
       val build = SparkEntry.queries(name)
-      build(spark, sfDir).count()
+      val rows = build(spark, sfDir).count()
       val (_, jobs) = JobCount(spark)(build(spark, sfDir).count())
       // an independent listener sees every job start and stage completion
       val stageJob = mutable.Map.empty[Int, Int]
@@ -47,8 +47,12 @@ class ProfileSpec extends SparkSpec {
       }
       assert(run.ok, s"$name: ${run.error}")
       assert(run.jobs.size == jobs, s"$name: profile ${run.jobs.size}, JobCount $jobs")
+      assert(run.rows.contains(rows), s"$name: profile ${run.rows}, count() $rows")
       val ids = run.jobs.map(_.id).toSet
-      assert(run.stages.map(_.id).sorted == completed.filter(s => ids(stageJob(s))).sorted)
+      // a stage whose job started before the watch (a job another suite
+      // left running) belongs to no profiled job
+      assert(run.stages.map(_.id).sorted ==
+        completed.filter(s => stageJob.get(s).exists(ids)).sorted)
       assert(run.stages.forall(s => ids(s.job) && s.maxTaskMs >= s.medianTaskMs))
       assert(run.stages.map(_.tasks).sum == run.tasks && run.tasks > 0)
     }
