@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines, all built on the
@@ -102,7 +102,7 @@ object Dedup {
     // ONE shingle with millions of rows. The hash aggregate combines
     // map-side (the df table is one row per distinct shingle), and the
     // join back is skew-splittable by AQE — same hardening as
-    // [[ExactSpans.repeatedSpans]]' gram df. (A per-shingle
+    // [[SkewGuard.capKeyFrequency]]. (A per-shingle
     // collect_list would be worse than either: it materializes a
     // stop-shingle's whole posting set in ONE row.)
     // dfTblOpt: the sketch-capped caller already aggregated the SAME
@@ -110,11 +110,8 @@ object Dedup {
     // shingle aggregate for the whole query instead of two)
     val dfTbl = dfTblOpt.getOrElse(
       sh.groupBy(col("shingle")).agg(count(lit(1)).as("df")))
-    // join key is NON-NULL BY CONSTRUCTION (derived via explode/hash
-    // of generated values, which never yields a null key row), so the
-    // non-null-safe equi-join keeps every row the replaced
-    // Window.partitionBy kept — a future NULLABLE key would silently
-    // drop its rows here (advice r16, low)
+    // join key is NON-NULL BY CONSTRUCTION, as in
+    // [[SkewGuard.capKeyFrequency]]'s count + join
     val withDf = sh.join(dfTbl, Seq("shingle"))
       .select(col(idCol), col("shingle"), col("df"))
     val observed = maxShingleDF match {
@@ -163,22 +160,12 @@ object Dedup {
     // frame — see ngramJaccardPairsSketchCapped): listed shingles drop
     // from candidate generation AFTER rank assignment, the exact
     // maxShingleDF discipline (slots consumed, verification still full
-    // sets). Same LOSSY caveat, same observe-metric audit; the list is
-    // bounded by postings/minEst, so the broadcast is safe by
-    // construction.
-    val prefix = hotShingles match {
-      case Some(hs) =>
-        val flagged = prefixDf.join(
-          broadcast(hs.select(col("shingle"), lit(true).as("__hot"))),
-          Seq("shingle"), "left")
-        SkewGuard.observeDropCount(flagged, "ngram_hot",
-          sum(when(col("__hot"), 1L)),
-          dropped => s"ngramJaccardPairs: sketch-derived hot-key cap " +
-            s"dropped $dropped prefix posting(s) from candidate " +
-            "generation (scores remain exact Jaccard over full sets)")
-          .filter(col("__hot").isNull).drop("__hot")
-      case None => prefixDf
-    }
+    // sets). Same LOSSY caveat, same observe-metric audit.
+    val prefix = SkewGuard.dropListedKeys(prefixDf, "shingle", hotShingles,
+      "ngram_hot",
+      dropped => s"ngramJaccardPairs: sketch-derived hot-key cap " +
+        s"dropped $dropped prefix posting(s) from candidate " +
+        "generation (scores remain exact Jaccard over full sets)")
     // Candidate pairs from POSTING LISTS, not a self-join: group the prefix
     // index by shingle and expand id pairs in-row. A self-join would plan
     // the whole windowed chain twice (Spark 4.1 AQE does not reuse
@@ -302,34 +289,6 @@ object Dedup {
       dfTblOpt = Some(dfTbl))
   }
 
-  /** MinHash signatures as one wide aggregation: column sig_h =
-    * `min(md5(h || '|' || shingle))` over the doc's shingle set — md5 as
-    * the random permutation proxy, lexicographic min. One shuffle on the
-    * doc id, NO 12× row explosion (numHashes aggregate expressions ride a
-    * single HashAggregate). Deterministic across engines (and
-    * SQL-expressible for the oracle).
-    */
-  def minhashSignatures(
-      sh: DataFrame, idCol: String, numHashes: Int): DataFrame = {
-    val aggs = (0 until numHashes).map { h =>
-      min(md5(concat(lit(h), lit("|"), col("shingle")))).as(s"sig_$h")
-    }
-    sh.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** MinHash + LSH near-dup pairs, verified with true Jaccard.
-    *
-    * Bands of `bandSize` signature rows are hashed; docs sharing any band
-    * hash become candidates (one shuffle on the band key); candidates are
-    * then verified against the exact shingle-set Jaccard. Recall follows
-    * the usual 1-(1-s^r)^b curve; precision is exact post-verify.
-    *
-    * @param broadcastCandidates broadcast the post-band candidate pair
-    *        list into the two verification joins (same contract and
-    *        caveats as [[ngramJaccardPairs]]'s flag: sound when banding
-    *        leaves candidates ≪ corpus; keep false for adversarial or
-    *        unknown corpora).
-    */
   /** The persistable MinHash INDEX: one row per doc with the signature
     * columns (`sig_0..sig_{numHashes-1}`), the distinct-shingle count
     * (`n_sh`) and the verification shingle set (`shset`) — everything the
@@ -338,7 +297,10 @@ object Dedup {
     * gets WRITTEN once per corpus build (parquet, pruned columnarly: a
     * band probe reads only the sig columns, a verify join only `shset`)
     * and then served to [[minhashLshPairsIncremental]] for every
-    * subsequent batch — the corpus text is never parsed again. */
+    * subsequent batch — the corpus text is never parsed again.
+    * sig_h = `min(md5(h || '|' || shingle))`: md5 is the permutation
+    * proxy (deterministic across engines, SQL-expressible for the
+    * oracle), and all minima ride ONE HashAggregate — no row explosion. */
   def minhashIndex(
       df: DataFrame,
       idCol: String,
@@ -388,7 +350,25 @@ object Dedup {
         expr(s"stack($nBands, $stackArgs) AS (band, band_sig)"))
   }
 
-  /** @param bandHotMinEst sketch-DERIVED hot-band cap (the X162
+  /** MinHash + LSH near-dup pairs, verified with true Jaccard.
+    *
+    * Bands of `bandSize` signature rows are hashed; docs sharing any band
+    * hash become candidates (one shuffle on the band key); candidates are
+    * then verified against the exact shingle-set Jaccard. Recall follows
+    * the usual 1-(1-s^r)^b curve; precision is exact post-verify.
+    *
+    * @param broadcastCandidates broadcast the post-band candidate pair
+    *        list into the two verification joins (same contract and
+    *        caveats as [[ngramJaccardPairs]]'s flag: sound when banding
+    *        leaves candidates ≪ corpus; keep false for adversarial or
+    *        unknown corpora).
+    * @param maxBandDF opt-in hot-band guard ([[SkewGuard.capKeyFrequency]]
+    *        on the (band, band_sig) postings): a flood of byte-identical
+    *        docs shares every band, making even true-positive candidates
+    *        quadratic in the flood size. LOSSY above the cap (run exact
+    *        dedup first — that is the operator that handles identical
+    *        floods); audited, never silent.
+    * @param bandHotMinEst sketch-DERIVED hot-band cap (the X162
     *        `ngramJaccardPairsSketchCapped` discipline extended to the
     *        band keys): one Count-Min pass over the (band, band_sig)
     *        postings (d=4, w=65536, seed=42 — the engine-shared md5
@@ -401,8 +381,8 @@ object Dedup {
     *        drops audited via the observe metric). The derivation is
     *        SQL-replayable, so the capped pair set hash-gates
     *        (q_minhash_sketch_capped). Composes with `maxBandDF`
-    *        (exact window count) — production pipelines serve the
-    *        sketch from the CountMinStream store instead. */
+    *        (exact count) — production pipelines serve the sketch from
+    *        the CountMinStream store instead. */
   def minhashLshPairs(
       df: DataFrame,
       idCol: String,
@@ -427,62 +407,18 @@ object Dedup {
     val perDoc = minhashIndex(df, idCol, textCol, shingleN, numHashes)
       .localCheckpoint()
     val bandsDet0 = bandFrame(perDoc.drop("shset"), idCol, bandSize)
-    // opt-in hot-band guard: a flood of byte-identical docs shares every
-    // band, making even true-positive candidates quadratic in the flood
-    // size. LOSSY above the cap (run exact dedup first — that is the
-    // operator that handles identical floods); audited, never silent.
-    val bandsDet = maxBandDF match {
-      case Some(cap) =>
-        require(cap >= 2, "maxBandDF must be >= 2")
-        // band df via partial-aggregated count + join, not an unordered
-        // window — a byte-identical flood is ONE (band, band_sig) key
-        // with the whole flood colocated (ExactSpans gram-df hardening)
-        val bdfTbl = bandsDet0.groupBy(col("band"), col("band_sig"))
-          .agg(count(lit(1)).as("bdf"))
-        // join key is NON-NULL BY CONSTRUCTION (derived via explode/hash
-        // of generated values, which never yields a null key row), so the
-        // non-null-safe equi-join keeps every row the replaced
-        // Window.partitionBy kept — a future NULLABLE key would silently
-        // drop its rows here (advice r16, low)
-        val withDf = bandsDet0.join(bdfTbl, Seq("band", "band_sig"))
-          .select(bandsDet0.columns.map(col) :+ col("bdf"): _*)
-        SkewGuard.observeDropCount(withDf, "minhash_band",
-          sum(when(col("bdf") > cap, 1L)),
-          dropped => s"minhashLshPairs: skew guard dropped $dropped " +
-            s"(doc, band) posting(s) whose band document frequency " +
-            "exceeds the cap from candidate generation (run exact dedup " +
-            "upstream to remove identical-document floods losslessly)")
-          .filter(col("bdf") <= cap)
-          .drop("bdf")
-      case None => bandsDet0
-    }
-    // sketch-derived hot-band cap (see the scaladoc): est ≥ floor drops
-    // the posting; hot keys are bounded by postings/minEst → broadcast
-    // is safe by construction
-    val bandsFinal = bandHotMinEst match {
-      case Some(minEst) =>
-        require(minEst >= 2, s"bandHotMinEst must be >= 2: $minEst")
-        val keyed = bandsDet.withColumn("__bk",
-          concat_ws(":", col("band"), col("band_sig")))
-        // fused build+probe over the distinct band keys (CountMin
-        // .hotKeysWeighted — bit-identical cap list): the d md5 buckets
-        // are computed once per DISTINCT key, and the band frame is
-        // evaluated twice (df aggregate + flagged join) instead of
-        // three times (sketch, probe, join)
-        val hot = CountMin.hotKeysWeighted(
-          keyed.groupBy(col("__bk")).agg(count(lit(1)).as("__kdf")),
-          "__bk", "__kdf", minEst, d = 4, w = 65536)
-          .select(col("__bk").as("__hotbk"))
-        val flagged = keyed.join(broadcast(hot),
-          col("__bk") === col("__hotbk"), "left")
-        SkewGuard.observeDropCount(flagged, "minhash_band_sketch",
-          sum(when(col("__hotbk").isNotNull, 1L)),
-          dropped => s"minhashLshPairs: sketch-derived hot-band cap " +
-            s"dropped $dropped (doc, band) posting(s) from candidate " +
-            "generation (verification stays exact Jaccard over full sets)")
-          .filter(col("__hotbk").isNull).drop("__bk", "__hotbk")
-      case None => bandsDet
-    }
+    val bandsDet = SkewGuard.capKeyFrequency(bandsDet0,
+      Seq("band", "band_sig"), maxBandDF, "maxBandDF", "minhash_band",
+      dropped => s"minhashLshPairs: skew guard dropped $dropped " +
+        s"(doc, band) posting(s) whose band document frequency " +
+        "exceeds the cap from candidate generation (run exact dedup " +
+        "upstream to remove identical-document floods losslessly)")
+    val bandsFinal = dropSketchHot(bandsDet,
+      concat_ws(":", col("band"), col("band_sig")), bandHotMinEst,
+      "bandHotMinEst", "minhash_band_sketch",
+      dropped => s"minhashLshPairs: sketch-derived hot-band cap " +
+        s"dropped $dropped (doc, band) posting(s) from candidate " +
+        "generation (verification stays exact Jaccard over full sets)")
 
     val ca = bandsFinal.select(col(idCol).as("doc_a"), col("band"),
       col("band_sig"), col("n_sh").as("n_a"))
@@ -513,6 +449,24 @@ object Dedup {
       .filter(jac >= threshold)
       .select(col("doc_a"), col("doc_b"), round(jac, 4).as("jaccard"))
   }
+
+  /** `bandHotMinEst`/`chunkHotMinEst`: the fused Count-Min build+probe
+    * ([[CountMin.hotKeysWeighted]], d=4, w=65536, seed=42 — the oracles
+    * replay this sketch over exactly these `key` strings) runs once per
+    * DISTINCT key, so the postings are evaluated twice (df aggregate +
+    * flagged join) instead of three times (sketch, probe, join). */
+  private def dropSketchHot(postings: DataFrame, key: Column,
+      minEst: Option[Long], param: String, name: String,
+      msg: Long => String): DataFrame =
+    minEst.fold(postings) { minEst =>
+      require(minEst >= 2, s"$param must be >= 2: $minEst")
+      val keyed = postings.withColumn("__hk", key)
+      val hot = CountMin.hotKeysWeighted(
+        keyed.groupBy(col("__hk")).agg(count(lit(1)).as("__kdf")),
+        "__hk", "__kdf", minEst, d = 4, w = 65536)
+      SkewGuard.dropListedKeys(keyed, "__hk", Some(hot), name, msg)
+        .drop("__hk")
+    }
 
   /** Incremental MinHash-LSH: near-dup pairs of a NEW batch against a
     * prebuilt corpus [[minhashIndex]] (plus within-batch pairs), WITHOUT
@@ -664,8 +618,12 @@ object Dedup {
     * pair within hamming distance 3 shares at least one of 4 bands),
     * verify with exact `bit_count(a^b)`. Caller contract: `fpCol` holds
     * values in [0, 2⁶³) and the frame is already materialized
-    * (checkpointed) — the band frame self-joins. */
-  /** @param chunkHotMinEst sketch-derived hot-chunk cap — the
+    * (checkpointed) — the band frame self-joins.
+    *
+    * @param maxChunkDF opt-in hot-chunk guard — the
+    *        [[minhashLshPairs]] `maxBandDF` contract on the (b, chunk)
+    *        postings (identical-doc floods share all four chunks).
+    * @param chunkHotMinEst sketch-derived hot-chunk cap — the
     *        [[minhashLshPairs]] `bandHotMinEst` contract on the
     *        (b, chunk) keys (Count-Min d=4/w=65536/seed=42; est ≥
     *        floor drops the posting from candidate generation, audited
@@ -677,54 +635,17 @@ object Dedup {
     val bands0 = fp.select(col(idCol), col(fpCol).as("simhash"),
         explode(expr("sequence(0, 3)")).as("b"))
       .withColumn("chunk", expr("shiftright(simhash, CAST(b * 16 AS INT)) & 65535"))
-    // opt-in hot-chunk guard — same contract as minhashLshPairs.maxBandDF
-    // (identical-doc floods share all four 16-bit chunks)
-    val bands1 = maxChunkDF match {
-      case Some(cap) =>
-        require(cap >= 2, "maxChunkDF must be >= 2")
-        // chunk df via partial-aggregated count + join, not an unordered
-        // window (identical-doc floods share all four chunks — the hot
-        // key IS the flood; ExactSpans gram-df hardening)
-        val cdfTbl = bands0.groupBy(col("b"), col("chunk"))
-          .agg(count(lit(1)).as("cdf"))
-        // join key is NON-NULL BY CONSTRUCTION (derived via explode/hash
-        // of generated values, which never yields a null key row), so the
-        // non-null-safe equi-join keeps every row the replaced
-        // Window.partitionBy kept — a future NULLABLE key would silently
-        // drop its rows here (advice r16, low)
-        val withDf = bands0.join(cdfTbl, Seq("b", "chunk"))
-          .select(bands0.columns.map(col) :+ col("cdf"): _*)
-        SkewGuard.observeDropCount(withDf, "simhash_chunk",
-          sum(when(col("cdf") > cap, 1L)),
-          dropped => s"simhashPairs: skew guard dropped $dropped " +
-            s"(doc, chunk) posting(s) whose chunk document frequency " +
-            "exceeds the cap from candidate generation (run exact dedup " +
-            "upstream to remove identical-document floods losslessly)")
-          .filter(col("cdf") <= cap)
-          .drop("cdf")
-      case None => bands0
-    }
-    // sketch-derived hot-chunk cap (see the scaladoc)
-    val bands = chunkHotMinEst match {
-      case Some(minEst) =>
-        require(minEst >= 2, s"chunkHotMinEst must be >= 2: $minEst")
-        val keyed = bands1.withColumn("__ck",
-          concat_ws(":", col("b"), col("chunk")))
-        val keys = keyed.select(col("__ck"))
-        val sk = CountMin.sketch(keys, "__ck", d = 4, w = 65536)
-        val hot = CountMin.estimate(sk, keys, "__ck", d = 4, w = 65536)
-          .filter(col("est") >= minEst)
-          .select(col("key").as("__hotck"))
-        val flagged = keyed.join(broadcast(hot),
-          col("__ck") === col("__hotck"), "left")
-        SkewGuard.observeDropCount(flagged, "simhash_chunk_sketch",
-          sum(when(col("__hotck").isNotNull, 1L)),
-          dropped => s"hammingPairs63: sketch-derived hot-chunk cap " +
-            s"dropped $dropped (doc, chunk) posting(s) from candidate " +
-            "generation (verification stays exact bit_count)")
-          .filter(col("__hotck").isNull).drop("__ck", "__hotck")
-      case None => bands1
-    }
+    val bands1 = SkewGuard.capKeyFrequency(bands0, Seq("b", "chunk"),
+      maxChunkDF, "maxChunkDF", "simhash_chunk",
+      dropped => s"simhashPairs: skew guard dropped $dropped " +
+        s"(doc, chunk) posting(s) whose chunk document frequency " +
+        "exceeds the cap from candidate generation (run exact dedup " +
+        "upstream to remove identical-document floods losslessly)")
+    val bands = dropSketchHot(bands1, concat_ws(":", col("b"), col("chunk")),
+      chunkHotMinEst, "chunkHotMinEst", "simhash_chunk_sketch",
+      dropped => s"hammingPairs63: sketch-derived hot-chunk cap " +
+        s"dropped $dropped (doc, chunk) posting(s) from candidate " +
+        "generation (verification stays exact bit_count)")
     val ca = bands.select(col(idCol).as("doc_a"), col("simhash").as("sh_a"),
       col("b"), col("chunk"))
     val cb = bands.select(col(idCol).as("doc_b"), col("simhash").as("sh_b"),
@@ -825,29 +746,10 @@ object Dedup {
     // land in one sign bucket; same contract as minhashLshPairs.maxBandDF
     // (raising bucketBits is the lossless first lever; the cap is for
     // floods no bucket width can split)
-    val withB = maxBucketDF match {
-      case Some(cap) =>
-        require(cap >= 2, "maxBucketDF must be >= 2")
-        // bucket df via partial-aggregated count + join, not an
-        // unordered window — an embedding flood is ONE sign bucket
-        // (ExactSpans gram-df hardening)
-        val bdfTbl = withB0.groupBy(col("bucket"))
-          .agg(count(lit(1)).as("bdf"))
-        // join key is NON-NULL BY CONSTRUCTION (derived via explode/hash
-        // of generated values, which never yields a null key row), so the
-        // non-null-safe equi-join keeps every row the replaced
-        // Window.partitionBy kept — a future NULLABLE key would silently
-        // drop its rows here (advice r16, low)
-        val withDf = withB0.join(bdfTbl, Seq("bucket"))
-          .select(withB0.columns.map(col) :+ col("bdf"): _*)
-        SkewGuard.observeDropCount(withDf, "embed_bucket",
-          sum(when(col("bdf") > cap, 1L)),
-          dropped => s"embeddingCosinePairs: skew guard dropped $dropped " +
-            s"vector(s) whose sign bucket exceeds the cap")
-          .filter(col("bdf") <= cap)
-          .drop("bdf")
-      case None => withB0
-    }
+    val withB = SkewGuard.capKeyFrequency(withB0, Seq("bucket"),
+      maxBucketDF, "maxBucketDF", "embed_bucket",
+      dropped => s"embeddingCosinePairs: skew guard dropped $dropped " +
+        s"vector(s) whose sign bucket exceeds the cap")
     val a = withB.select(col("bucket"), col(idCol).as("doc_a"),
       col("v").as("va"), col("n").as("na"))
     val b = withB.select(col("bucket"), col(idCol).as("doc_b"),

@@ -50,29 +50,13 @@ object EditSim {
         explode(variants).as("variant"))
       .distinct() // a char repeated adjacently yields duplicate variants
 
-    val guarded = maxVariantDF match {
-      case Some(cap) =>
-        // variant df via partial-aggregated count + join, not an
-        // unordered window — an identical-string flood shares every
-        // deletion variant (ExactSpans gram-df hardening)
-        val vdfTbl = exploded.groupBy(col("variant"))
-          .agg(count(lit(1)).as("vdf"))
-        // join key is NON-NULL BY CONSTRUCTION (explode of generated
-        // deletion variants never yields a null key row), so the
-        // non-null-safe equi-join keeps every row the replaced
-        // Window.partitionBy kept — a future NULLABLE key would
-        // silently drop its rows here (advice r16, low)
-        val withDf = exploded.join(vdfTbl, Seq("variant"))
-          .select(exploded.columns.map(col) :+ col("vdf"): _*)
-        SkewGuard.observeDropCount(withDf, "edit_variant",
-          sum(when(col("vdf") > cap, 1L)),
-          dropped => s"dist1Pairs: skew guard dropped $dropped " +
-            "(id, variant) posting(s) whose variant document frequency " +
-            "exceeds the cap from candidate generation (verification " +
-            "stays exact levenshtein)")
-          .filter(col("vdf") <= cap).drop("vdf")
-      case None => exploded
-    }
+    // an identical-string flood shares every deletion variant
+    val guarded = SkewGuard.capKeyFrequency(exploded, Seq("variant"),
+      maxVariantDF, "maxVariantDF", "edit_variant",
+      dropped => s"dist1Pairs: skew guard dropped $dropped " +
+        "(id, variant) posting(s) whose variant document frequency " +
+        "exceeds the cap from candidate generation (verification " +
+        "stays exact levenshtein)")
 
     val a = guarded.select(col("id").as("id_a"), col("str").as("str_a"),
       col("variant"))

@@ -65,28 +65,12 @@ object ExactSpans {
           s"i -> md5(array_join(slice(ws, i + 1, $minTokens), ' ')))")))
       .toDF("doc_id", "pos", "g")
       .localCheckpoint()
-    val grams = maxGramDF match {
-      case Some(cap) =>
-        require(cap >= 2, "maxGramDF must be >= 2")
-        // gram df via partial-aggregated count + join, NOT an unordered
-        // window: Window.partitionBy(g) colocates each gram's rows in
-        // one task — and a boilerplate flood (the exact case this cap
-        // audits) is one gram with millions of rows. The hash aggregate
-        // combines map-side; the join back is skew-splittable by AQE.
-        val gdfTbl = grams0.groupBy(col("g"))
-          .agg(count(lit(1)).as("gdf"))
-        val withDf = grams0.join(gdfTbl, Seq("g"))
-          .select(col("doc_id"), col("pos"), col("g"), col("gdf"))
-        SkewGuard.observeDropCount(withDf, "exact_span_gram",
-          sum(when(col("gdf") > cap, 1L)),
-          dropped => s"repeatedSpans: skew guard dropped $dropped " +
-            "window posting(s) whose document frequency exceeds the cap " +
-            "(boilerplate floods; spans crossing only capped windows " +
-            "are truncated or lost — the audited trade)")
-          .filter(col("gdf") <= cap)
-          .drop("gdf")
-      case None => grams0
-    }
+    val grams = SkewGuard.capKeyFrequency(grams0, Seq("g"), maxGramDF,
+      "maxGramDF", "exact_span_gram",
+      dropped => s"repeatedSpans: skew guard dropped $dropped " +
+        "window posting(s) whose document frequency exceeds the cap " +
+        "(boilerplate floods; spans crossing only capped windows " +
+        "are truncated or lost — the audited trade)")
     val a = grams.select(col("doc_id").as("doc_a"),
       col("pos").as("pos_a"), col("g"))
     val b = grams.select(col("doc_id").as("doc_b"),

@@ -53,14 +53,11 @@ object LexCosine {
       .agg(count(lit(1)).as("tf"))
     // stop-term projection: df via partial-aggregated count + join,
     // not an unordered window — a stop-term flood is ONE term key with
-    // the whole corpus colocated (ExactSpans gram-df hardening); the
+    // the whole corpus colocated (SkewGuard.capKeyFrequency); the
     // df table is one row per distinct term, combined map-side
     val dfTbl = tok.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    // join key is NON-NULL BY CONSTRUCTION (derived via explode/hash
-    // of generated values, which never yields a null key row), so the
-    // non-null-safe equi-join keeps every row the replaced
-    // Window.partitionBy kept — a future NULLABLE key would silently
-    // drop its rows here (advice r16, low)
+    // join key is NON-NULL BY CONSTRUCTION, as in
+    // SkewGuard.capKeyFrequency's count + join
     val kept = tok.join(dfTbl, Seq("term"))
       .where(col("df") <= maxTermDF)
       .select(col("doc"), col("term"), col("tf"))

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Shared "no silent caps" plumbing for opt-in skew guards: whenever an
@@ -13,6 +14,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * a QueryExecutionListener AFTER the action completes — construction
   * stays side-effect-free and the audit costs zero extra Spark jobs (a
   * synchronous pre-count would be a second pass over the corpus).
+  *
+  * The pair generators' two hot-key cap shapes live here too:
+  * [[capKeyFrequency]] (exact document frequency) and [[dropListedKeys]]
+  * (a precomputed, e.g. Count-Min-derived, hot-key list).
   */
 object SkewGuard {
 
@@ -48,6 +53,49 @@ object SkewGuard {
     messages.put(metric, msg)
     df.observe(metric, dropCount.as("n_dropped"))
   }
+
+  /** Drop every posting of `df` whose `keys` occur in more than `cap`
+    * postings, auditing the dropped count under `name`; no cap returns
+    * `df` itself. `param` names the caller's cap parameter in the range
+    * check. Returns `df`'s columns, in order. */
+  def capKeyFrequency(df: DataFrame, keys: Seq[String], cap: Option[Long],
+      param: String, name: String, msg: Long => String): DataFrame =
+    cap.fold(df) { cap =>
+      require(cap >= 2, s"$param must be >= 2")
+      // key df via partial-aggregated count + join, NOT an unordered
+      // window: Window.partitionBy(keys) colocates each key's postings in
+      // one task — and a flood (the exact case this cap audits) is one
+      // key with millions of rows. The hash aggregate combines map-side;
+      // the join back is skew-splittable by AQE.
+      val dfTbl = df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__kdf"))
+      // join key is NON-NULL BY CONSTRUCTION at every caller (derived via
+      // explode/hash of generated values, which never yields a null key
+      // row), so the non-null-safe equi-join keeps every row the replaced
+      // Window.partitionBy kept — a future NULLABLE key would silently
+      // drop its rows here (advice r16, low)
+      val withDf = df.join(dfTbl, keys)
+        .select(df.columns.map(col) :+ col("__kdf"): _*)
+      observeDropCount(withDf, name, sum(when(col("__kdf") > cap, 1L)), msg)
+        .filter(col("__kdf") <= cap)
+        .drop("__kdf")
+    }
+
+  /** Drop every posting of `df` whose `key` is listed in `hot` (a
+    * DISTINCT one-column frame), auditing the dropped count under
+    * `name`; no list returns `df` itself. The list broadcasts: a hot
+    * list derived with a frequency floor f holds at most postings/f
+    * keys, so it is bounded by construction. The key column moves
+    * first; other columns keep their order. */
+  def dropListedKeys(df: DataFrame, key: String, hot: Option[DataFrame],
+      name: String, msg: Long => String): DataFrame =
+    hot.fold(df) { hot =>
+      val flagged = df.join(
+        broadcast(hot.toDF(key).withColumn("__hot", lit(true))),
+        Seq(key), "left")
+      observeDropCount(flagged, name, sum(when(col("__hot"), 1L)), msg)
+        .filter(col("__hot").isNull)
+        .drop("__hot")
+    }
 
   private def ensureListener(spark: SparkSession): Unit =
     if (registered.add(spark)) {

@@ -71,30 +71,12 @@ object SpanDedup {
       spanTokens: Int = 8, winnowWindow: Int = 4,
       maxFingerprintDF: Option[Long] = None): DataFrame = {
     val sel0 = fingerprints(df, idCol, textCol, spanTokens, winnowWindow)
-    val sel = maxFingerprintDF match {
-      case Some(cap) =>
-        require(cap >= 2, "maxFingerprintDF must be >= 2")
-        // fp df via partial-aggregated count + join, not an unordered
-        // window — a boilerplate flood is ONE fingerprint with the
-        // whole flood colocated (ExactSpans gram-df hardening)
-        val dfTbl = sel0.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-        // join key is NON-NULL BY CONSTRUCTION (derived via explode/hash
-        // of generated values, which never yields a null key row), so the
-        // non-null-safe equi-join keeps every row the replaced
-        // Window.partitionBy kept — a future NULLABLE key would silently
-        // drop its rows here (advice r16, low)
-        val withDf = sel0.join(dfTbl, Seq("fp"))
-          .select(sel0.columns.map(col) :+ col("df"): _*)
-        SkewGuard.observeDropCount(withDf, "span",
-          sum(when(col("df") > cap, 1L)),
-          dropped => s"sharedSpanPairs: skew guard dropped $dropped " +
-            s"(doc, fingerprint) posting(s) whose document frequency " +
-            "exceeds the cap from pair generation (a fingerprint shared " +
-            "by n docs expands to C(n,2) pairs)")
-          .filter(col("df") <= cap)
-          .drop("df")
-      case None => sel0
-    }
+    val sel = SkewGuard.capKeyFrequency(sel0, Seq("fp"), maxFingerprintDF,
+      "maxFingerprintDF", "span",
+      dropped => s"sharedSpanPairs: skew guard dropped $dropped " +
+        s"(doc, fingerprint) posting(s) whose document frequency " +
+        "exceeds the cap from pair generation (a fingerprint shared " +
+        "by n docs expands to C(n,2) pairs)")
     // posting-list pair expansion: sorted per-fingerprint doc list, in-row
     // ordered pairs — bounded by each fingerprint's own posting size (the
     // cap above), never a corpus self-join

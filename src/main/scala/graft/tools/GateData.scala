@@ -13,8 +13,14 @@ import org.apache.spark.sql.functions._
   * The disjointness discipline (the measured-not-guessed rules that
   * keep ×10 data from becoming ×100 work):
   *   - documents: replica k word-prefixes text with `r<k>q` (k=0
-  *     verbatim) — shingle/minhash/vocab universes stay disjoint;
-  *     doc_id offsets are multiples of 10⁶ so `% 10` splits hold;
+  *     verbatim) — shingle/minhash/vocab universes stay disjoint, so no
+  *     near-dup pair crosses replicas (GateDataSpec); doc_id offsets
+  *     are multiples of 10⁶ so `% 10` splits hold. Exact pair
+  *     generators (q_ngram_jaccard) read rows ×replicas exactly; LSH
+  *     ones read NEAR it (q_minhash_lsh ×10.33 from sf0.01, 24–25
+  *     pairs per replica against the base's 24): prefixed shingles hash
+  *     to different min-md5 signatures, so each replica has its own
+  *     banding recall;
   *   - supplier/part/customer names: DOUBLED-digit prefix `r<k><k>q`
   *     (single digits differ by one char — a cross-replica dist-1
   *     edit-pair bomb, measured as ×12.7 edit-distance pair rows

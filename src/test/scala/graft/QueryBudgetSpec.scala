@@ -42,12 +42,13 @@ class QueryBudgetSpec extends SparkSpec {
     test(s"$name: job and shuffle-exchange budget") {
       val build = SparkEntry.queries(name)
       build(spark, sfDir).count()
-      val (_, ran) = JobCount(spark)(build(spark, sfDir).count())
+      val (_, started) = JobCount.jobs(spark)(build(spark, sfDir).count())
       val counted = build(spark, sfDir).groupBy().count()
       counted.collect()
       val shuffles = Profile.planCounts(counted.queryExecution.executedPlan).exchanges
-      assert((ran, shuffles) == ((jobs, exchanges)),
-        s"$name: $ran jobs, $shuffles shuffle exchanges")
+      assert((started.size, shuffles) == ((jobs, exchanges)),
+        s"$name: ${started.size} jobs, $shuffles shuffle exchanges; " +
+          s"jobs:\n${started.mkString("\n")}")
     }
   }
 

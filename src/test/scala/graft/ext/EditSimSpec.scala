@@ -51,4 +51,17 @@ class EditSimSpec extends SparkSpec {
     assert(un.size === 36) // C(9,2) all at distance 1 via shared variant "x"
     assert(capped.subsetOf(un) && capped.size < un.size)
   }
+
+  test("variant-DF cap drops an identical-string flood and keeps the " +
+      "legitimate pair") {
+    // 30 copies of one string share every deletion variant (df 30);
+    // "apple"/"apples" meet only on variant "apple" (df 2)
+    val flood = (1L to 30L).map(_ -> "boilerplate")
+    val rows = flood ++ Seq(100L -> "apple", 101L -> "apples")
+    val legit = (100L, 101L, 1)
+    val un = pairs(rows)
+    assert(un.contains(legit))
+    assert(un.count(_._1 <= 30L) === 30 * 29 / 2) // every flood pair
+    assert(pairs(rows, cap = Some(2L)) === Set(legit))
+  }
 }

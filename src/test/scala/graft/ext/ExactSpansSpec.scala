@@ -100,6 +100,26 @@ class ExactSpansSpec extends SparkSpec {
       (2L, 0L, 5L), (3L, 2L, 6L), (4L, 0L, 3L)))
   }
 
+  test("gram-DF cap drops a boilerplate flood and keeps the legitimate " +
+      "span") {
+    // 20 byte-identical documents: every window has df 20; the planted
+    // pair's windows have df 2
+    val flood = (1L to 20L).map(_ -> "cookie banner accept all terms now")
+    val docs = flood ++ Seq(
+      (100L, "intro alpha beta gamma delta epsilon end"),
+      (101L, "alpha beta gamma delta epsilon other words"))
+    val legit = (100L, 101L, 1L, 0L, 5L)
+    def capped(cap: Option[Long]) =
+      ExactSpans.repeatedSpans(docs.toDF("doc_id", "text"), "doc_id",
+        "text", minTokens = 4, maxGramDF = cap)
+        .as[(Long, Long, Long, Long, Long)].collect().toSet
+    val un = capped(None)
+    assert(un.contains(legit))
+    assert(un.contains((1L, 2L, 0L, 0L, 6L)))
+    assert(un.count(_._2 <= 20L) === 20 * 19 / 2) // every flood pair
+    assert(capped(Some(2L)) === Set(legit))
+  }
+
   test("docs shorter than minTokens never key a window (and sequence() " +
       "cannot run descending)") {
     val docs = Seq((1L, "a b"), (2L, "a b"), (3L, "a b c d e"))

@@ -9,8 +9,8 @@ import graft.{SparkEntry, SparkSpec}
 /** GateData's replica discipline, checked on a 2-replica copy of
   * sf0.001: sharded tables double with unique keys and shard-local
   * foreign keys, fixed dims stay verbatim, replica 1's words carry the
-  * replica prefix and its embeddings are an exact sign-flip of replica
-  * 0's. The same dir then serves the sf1 timing recipe's second step,
+  * replica prefix (so no near-dup pair crosses replicas) and its
+  * embeddings are an exact sign-flip of replica 0's. The same dir then serves the sf1 timing recipe's second step,
   * a Profile run. */
 class GateDataSpec extends SparkSpec {
   private val base = "/root/testdata/sf0.001"
@@ -68,6 +68,17 @@ class GateDataSpec extends SparkSpec {
     assert(words.filter(!col("w").startsWith("r1q")).isEmpty)
     assert(docs.filter(col("doc_id") < 1000000L).select("doc_id", "text")
       .exceptAll(tbl(base, "documents").select("doc_id", "text")).isEmpty)
+  }
+
+  test("near-dup pair generators never pair documents across replicas") {
+    Seq("q_minhash_lsh", "q_ngram_jaccard").foreach { q =>
+      val replicas = SparkEntry.queries(q)(spark, out).collect()
+        .map(r => (r.getAs[Long]("doc_a") / 1000000L,
+          r.getAs[Long]("doc_b") / 1000000L))
+      assert(replicas.toSet.contains((1L, 1L)), s"$q: no replica-1 pair")
+      val cross = replicas.filter { case (a, b) => a != b }
+      assert(cross.isEmpty, s"$q: cross-replica pair(s) ${cross.toSeq}")
+    }
   }
 
   test("replica-1 embeddings keep replica 0's norms and in-replica dot " +
