@@ -481,22 +481,18 @@ object Dedup {
     * verify) — spec-asserted, and hash-gated against the full-recompute
     * SQL oracle (q_dedup_incr).
     *
-    * Scale shape: with `broadcastBatch` (default) the batch band list is
-    * broadcast, so the corpus-side band scan joins map-side — the ONLY
-    * pass over the corpus index is one columnar scan of its sig columns,
-    * plus verify-join lookups of `shset` for the candidate ids. Pass
-    * false when the batch itself is huge (both sides shuffle on the band
-    * key). Indexes must have disjoint id sets and the same signature
-    * family (numHashes is read off the schema and must match).
+    * Scale shape ([[incrementalCandidates]]): the ONLY pass over the
+    * corpus index is one columnar scan of its sig columns, plus
+    * verify-join lookups of `shset` for the candidate ids. Indexes must
+    * have disjoint id sets and the same signature family (numHashes is
+    * read off the schema and must match).
     */
   def minhashLshPairsIncremental(
       corpusIndex: DataFrame,
       batchIndex: DataFrame,
       idCol: String,
       bandSize: Int = 4,
-      threshold: Double = 0.7,
-      broadcastBatch: Boolean = true,
-      broadcastCandidates: Boolean = false
+      threshold: Double = 0.7
   ): DataFrame = {
     // same-family check: bandFrame reads numHashes off each index's own
     // schema, so a 12-hash corpus joined with a 16-hash batch would band
@@ -508,31 +504,15 @@ object Dedup {
       s"corpus index has $nCorpus sig_* columns but batch index has " +
         s"$nBatch — both must come from the same minhashIndex signature " +
         "family (identical numHashes)")
-    val bandsBatch0 = bandFrame(batchIndex, idCol, bandSize)
-    val bandsAll = bandFrame(corpusIndex, idCol, bandSize)
-      .unionByName(bandsBatch0)
-    val bandsBatch = if (broadcastBatch) broadcast(bandsBatch0) else bandsBatch0
-    val raw = bandsAll
-      .select(col(idCol).as("doc_a"), col("band"), col("band_sig"),
-        col("n_sh").as("n_a"))
-      .join(bandsBatch.select(col(idCol).as("doc_b"), col("band"),
-        col("band_sig"), col("n_sh").as("n_b")), Seq("band", "band_sig"))
-      .filter(col("doc_a") =!= col("doc_b"))
-    // orient a < b (batch-batch collisions arrive in both orientations,
-    // corpus-batch in one); sizes swap with their ids; then dedup
-    val aLtB = col("doc_a") < col("doc_b")
-    val candidates = raw.select(
-        when(aLtB, col("doc_a")).otherwise(col("doc_b")).as("doc_a"),
-        when(aLtB, col("doc_b")).otherwise(col("doc_a")).as("doc_b"),
-        when(aLtB, col("n_a")).otherwise(col("n_b")).as("n_a"),
-        when(aLtB, col("n_b")).otherwise(col("n_a")).as("n_b"))
-      .distinct()
+    val candidates = incrementalCandidates(
+      bandFrame(corpusIndex, idCol, bandSize),
+      bandFrame(batchIndex, idCol, bandSize),
+      idCol, Seq("band", "band_sig"), "n_sh", "n_a", "n_b")
     val docsets = corpusIndex.select(col(idCol), col("shset"))
       .unionByName(batchIndex.select(col(idCol), col("shset")))
     val jac = col("n_inter").cast("double") /
       (col("n_a") + col("n_b") - col("n_inter"))
-    val probe = if (broadcastCandidates) broadcast(candidates) else candidates
-    probe
+    candidates
       .join(docsets.select(col(idCol).as("doc_a"), col("shset").as("sa")),
         Seq("doc_a"))
       .join(docsets.select(col(idCol).as("doc_b"), col("shset").as("sb")),
@@ -540,6 +520,27 @@ object Dedup {
       .withColumn("n_inter", size(array_intersect(col("sa"), col("sb"))))
       .filter(jac >= threshold)
       .select(col("doc_a"), col("doc_b"), round(jac, 4).as("jaccard"))
+  }
+
+  /** The candidate join of both incremental generators: corpus ∪ batch
+    * postings join the BROADCAST batch postings on `keys` (the corpus
+    * never shuffles); pairs orient doc_a < doc_b (batch-batch collisions
+    * arrive in both orientations, corpus-batch in one), each `payload`
+    * swapping with its id into `pa`/`pb`; then dedup. */
+  private def incrementalCandidates(corpusPostings: DataFrame,
+      batchPostings: DataFrame, idCol: String, keys: Seq[String],
+      payload: String, pa: String, pb: String): DataFrame = {
+    def side(df: DataFrame, doc: String, p: String) =
+      df.select(col(idCol).as(doc) +: col(payload).as(p) +: keys.map(col): _*)
+    val raw = side(corpusPostings.unionByName(batchPostings), "doc_a", pa)
+      .join(side(broadcast(batchPostings), "doc_b", pb), keys)
+      .filter(col("doc_a") =!= col("doc_b"))
+    val aLtB = col("doc_a") < col("doc_b")
+    def oriented(x: String, y: String) =
+      when(aLtB, col(x)).otherwise(col(y)).as(x)
+    raw.select(oriented("doc_a", "doc_b"), oriented("doc_b", "doc_a"),
+        oriented(pa, pb), oriented(pb, pa))
+      .distinct()
   }
 
   /** 63-bit SimHash per document, occurrence-weighted.
@@ -610,15 +611,12 @@ object Dedup {
   }
 
   /** Near-dup pairs over ANY 63-bit fingerprint column — the banded
-    * Hamming join [[simhashPairs]] introduced, factored out so every
+    * Hamming join [[simhashPairs]] describes, factored out so every
     * 63-bit fingerprint family ([[simhash]], [[ImageHash.dhash63]] /
     * [[ImageHash.phash63]] perceptual image hashes) pairs through ONE
-    * shuffle shape: four 16-bit chunks (the top band carries 15 usable
-    * bits), docs sharing ANY chunk become candidates (pigeonhole: every
-    * pair within hamming distance 3 shares at least one of 4 bands),
-    * verify with exact `bit_count(a^b)`. Caller contract: `fpCol` holds
-    * values in [0, 2⁶³) and the frame is already materialized
-    * (checkpointed) — the band frame self-joins.
+    * shuffle shape. Caller contract: `fpCol` holds values in [0, 2⁶³)
+    * and the frame is already materialized (checkpointed) — the band
+    * frame self-joins.
     *
     * @param maxChunkDF opt-in hot-chunk guard — the
     *        [[minhashLshPairs]] `maxBandDF` contract on the (b, chunk)
@@ -632,11 +630,8 @@ object Dedup {
       fp: DataFrame, idCol: String, fpCol: String,
       maxHamming: Int = 3, maxChunkDF: Option[Long] = None,
       chunkHotMinEst: Option[Long] = None): DataFrame = {
-    val bands0 = fp.select(col(idCol), col(fpCol).as("simhash"),
-        explode(expr("sequence(0, 3)")).as("b"))
-      .withColumn("chunk", expr("shiftright(simhash, CAST(b * 16 AS INT)) & 65535"))
-    val bands1 = SkewGuard.capKeyFrequency(bands0, Seq("b", "chunk"),
-      maxChunkDF, "maxChunkDF", "simhash_chunk",
+    val bands1 = SkewGuard.capKeyFrequency(chunkFrame(fp, idCol, fpCol),
+      Seq("b", "chunk"), maxChunkDF, "maxChunkDF", "simhash_chunk",
       dropped => s"simhashPairs: skew guard dropped $dropped " +
         s"(doc, chunk) posting(s) whose chunk document frequency " +
         "exceeds the cap from candidate generation (run exact dedup " +
@@ -646,9 +641,9 @@ object Dedup {
       dropped => s"hammingPairs63: sketch-derived hot-chunk cap " +
         s"dropped $dropped (doc, chunk) posting(s) from candidate " +
         "generation (verification stays exact bit_count)")
-    val ca = bands.select(col(idCol).as("doc_a"), col("simhash").as("sh_a"),
+    val ca = bands.select(col(idCol).as("doc_a"), col("fp63").as("sh_a"),
       col("b"), col("chunk"))
-    val cb = bands.select(col(idCol).as("doc_b"), col("simhash").as("sh_b"),
+    val cb = bands.select(col(idCol).as("doc_b"), col("fp63").as("sh_b"),
       col("b"), col("chunk"))
     ca.join(cb, Seq("b", "chunk"))
       .filter(col("doc_a") < col("doc_b"))
@@ -667,45 +662,27 @@ object Dedup {
     * text minhash has. Emitted pairs all touch the batch; results for
     * those pairs are IDENTICAL to a full [[hammingPairs63]] over
     * corpus ∪ batch (same 4×16-bit chunks, same exact bit_count
-    * verify) — spec-asserted.
-    *
-    * Scale shape: with `broadcastBatch` (default) the batch's chunk
-    * list broadcasts, so the ONLY pass over the corpus is one columnar
-    * scan of its (id, fp) columns joined map-side — the corpus never
-    * shuffles. Pass false when the batch itself is huge. Ids must be
-    * disjoint across the two frames; fingerprints in [0, 2⁶³). */
+    * verify) — spec-asserted. Scale shape ([[incrementalCandidates]]):
+    * the ONLY pass over the corpus is one columnar scan of its (id, fp)
+    * columns. Ids disjoint across the two frames; fps in [0, 2⁶³). */
   def hammingPairs63Incremental(
       corpusFps: DataFrame, batchFps: DataFrame, idCol: String,
-      fpCol: String, maxHamming: Int = 3,
-      broadcastBatch: Boolean = true): DataFrame = {
-    def bandsOf(df: DataFrame) =
-      df.select(col(idCol), col(fpCol).as("fp63"),
-          explode(expr("sequence(0, 3)")).as("b"))
-        .withColumn("chunk",
-          expr("shiftright(fp63, CAST(b * 16 AS INT)) & 65535"))
-    val bandsBatch0 = bandsOf(batchFps)
-    val bandsAll = bandsOf(corpusFps).unionByName(bandsBatch0)
-    val bandsBatch =
-      if (broadcastBatch) broadcast(bandsBatch0) else bandsBatch0
-    val raw = bandsAll
-      .select(col(idCol).as("doc_a"), col("fp63").as("fa"),
-        col("b"), col("chunk"))
-      .join(bandsBatch.select(col(idCol).as("doc_b"), col("fp63").as("fb"),
-        col("b"), col("chunk")), Seq("b", "chunk"))
-      .filter(col("doc_a") =!= col("doc_b"))
-    // orient a < b (batch-batch collisions arrive in both orientations,
-    // corpus-batch in one); fingerprints swap with their ids
-    val aLtB = col("doc_a") < col("doc_b")
-    raw.select(
-        when(aLtB, col("doc_a")).otherwise(col("doc_b")).as("doc_a"),
-        when(aLtB, col("doc_b")).otherwise(col("doc_a")).as("doc_b"),
-        when(aLtB, col("fa")).otherwise(col("fb")).as("fa"),
-        when(aLtB, col("fb")).otherwise(col("fa")).as("fb"))
-      .distinct()
+      fpCol: String, maxHamming: Int = 3): DataFrame =
+    incrementalCandidates(chunkFrame(corpusFps, idCol, fpCol),
+        chunkFrame(batchFps, idCol, fpCol),
+        idCol, Seq("b", "chunk"), "fp63", "fa", "fb")
       .select(col("doc_a"), col("doc_b"),
         expr("bit_count(fa ^ fb)").as("hamming"))
       .filter(col("hamming") <= maxHamming)
-  }
+
+  /** (id, fp63, b, chunk): the four 16-bit chunk postings of a 63-bit
+    * fingerprint, the band frame of both Hamming generators. */
+  private def chunkFrame(fp: DataFrame, idCol: String,
+      fpCol: String): DataFrame =
+    fp.select(col(idCol), col(fpCol).as("fp63"),
+        explode(expr("sequence(0, 3)")).as("b"))
+      .withColumn("chunk",
+        expr("shiftright(fp63, CAST(b * 16 AS INT)) & 65535"))
 
   /** Decontamination: n-gram containment of each probe (eval/test) doc in
     * the training corpus — |S(probe) ∩ V(corpus)| / |S(probe)|, the

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted BM25 posting index — the SPARSE-retrieval serving path,
@@ -28,9 +28,10 @@ import org.apache.spark.sql.functions._
   * SAME wave id and it replaces whatever the dying run left (full
   * wave, partial wave, or garbage) instead of doubling postings.
   *
-  * Score parity is a CONTRACT: [[scoreQuery]] reproduces
-  * [[Relevance.bm25]]'s float expression tree literally (same idf
-  * form, same association order, same 4-dp rounding), so
+  * Score parity is a CONTRACT: [[scoreQuery]] and [[Relevance.bm25]]
+  * build their score from the ONE expression tree
+  * [[Relevance.bm25Columns]] (same idf form, same association order,
+  * same 4-dp rounding), so
   * index-then-serve equals scan-scoring bit-for-bit on matching docs —
   * `q_bm25_indexed`/`q_bm25_append` hash-gate that against the SAME
   * SQL oracle as `q_bm25` restricted to docs with ≥ 1 hit.
@@ -211,20 +212,9 @@ object PostingIndex {
     // from the RESULTS; df/stats above stay wave-summed (stale until
     // compaction) so surviving docs score identically pre/post delete
     val masked = snap.masked(withTf, "doc_id")
-    val joined = masked.join(dls, "doc_id")
+    masked.join(dls, "doc_id")
       .crossJoin(broadcast(stats)).crossJoin(broadcast(dfRow))
-    val dlNorm = col("dl").cast("double") / (col("sum_dl") / col("n_docs"))
-    val termScore: Int => Column = { i =>
-      val tf = col(s"tf_$i").cast("double")
-      val df = col(s"df_$i")
-      val idf = log((col("n_docs") - df + lit(0.5)) / (df + lit(0.5)) + lit(1.0))
-      idf * (tf * lit(k1 + 1.0)) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dlNorm))
-    }
-    val score = lower.indices.map(termScore).reduce(_ + _)
-    joined.select(
-      (col("doc_id") +: col("dl") +: lower.indices.map(i => col(s"tf_$i"))) :+
-        round(score, 4).as("bm25"): _*)
+      .select(Relevance.bm25Columns("doc_id", lower.size, k1, b): _*)
   }
 
   /** Compact the PINNED wave set into ONE new wave and re-pin the

@@ -61,9 +61,16 @@ object Relevance {
           count(when(col(s"tf_$i") > 0, 1)).cast("double").as(s"df_$i"))
     val stats = base.agg(statAggs.head, statAggs.tail: _*)
 
-    // score_t = idf_t · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl));
-    // expression tree (association order) mirrored verbatim in the oracle
-    val joined = base.crossJoin(broadcast(stats))
+    base.crossJoin(broadcast(stats))
+      .select(bm25Columns(idCol, terms.size, k1, b): _*)
+  }
+
+  /** (id, dl, tf_i.., bm25) over (dl, tf_i, df_i, n_docs, sum_dl): the
+    * ONE score of [[bm25]] and [[PostingIndex.scoreQuery]] (parity by
+    * construction). score_t = idf_t · tf·(k1+1) / (tf + k1·(1 − b +
+    * b·dl/avgdl)); association order mirrored verbatim in the oracle */
+  private[ext] def bm25Columns(idCol: String, nTerms: Int, k1: Double,
+      b: Double): Seq[Column] = {
     val dlNorm = col("dl").cast("double") / (col("sum_dl") / col("n_docs"))
     val termScore: Int => Column = { i =>
       val tf = col(s"tf_$i").cast("double")
@@ -72,10 +79,9 @@ object Relevance {
       idf * (tf * lit(k1 + 1.0)) /
         (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dlNorm))
     }
-    val score = terms.indices.map(termScore).reduce(_ + _)
-    joined.select(
-      (col(idCol) +: col("dl") +: terms.indices.map(i => col(s"tf_$i"))) :+
-        round(score, 4).as("bm25"): _*)
+    val score = (0 until nTerms).map(termScore).reduce(_ + _)
+    (col(idCol) +: col("dl") +: (0 until nTerms).map(i => col(s"tf_$i"))) :+
+      round(score, 4).as("bm25")
   }
 
   /** Top-k TF-IDF keywords per document — the classic "what is this doc

@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -183,6 +183,48 @@ object MediaQueries {
       Multimodal.attach(videoDedupAvis(s, dir), "doc_id", "avi", "avi")
         .as[Multimodal.MediaRow])
   }
+
+  /** The q_*_neardup_filter batch face over one media family (`blob`:
+    * its binary column and format; see q_image_neardup_filter). */
+  private def neardupFilter(s: SparkSession, media: DataFrame,
+      blob: String, fingerprints: Dataset[Multimodal.MediaRow] => DataFrame,
+      fpCol: String): DataFrame = {
+    import s.implicits._
+    val fp: DataFrame => DataFrame =
+      b => fingerprints(Multimodal.attach(b, "doc_id", blob, blob)
+          .as[Multimodal.MediaRow])
+        .select(col("media_id").as("doc_id"), col(fpCol))
+    val corpusFps =
+      fp(media.filter(expr("((doc_id div 10) div 3) % 2 = 0")))
+        .localCheckpoint()
+    graft.streaming.FingerprintDedupStream.filterBatch(corpusFps,
+      media.filter(expr("((doc_id div 10) div 3) % 2 = 1")), fp,
+      "doc_id", fpCol, maxHamming = 3)
+      .select(col("doc_id"))
+  }
+
+  /** [[neardupFilter]]'s oracle over one family's fingerprint replay
+    * (`fpCtes` defines `fp(doc_id, f)`): the stream's keep-min drop
+    * policy over the banded-Hamming pair set — an odd-GROUP (batch)
+    * item drops as the larger side of ANY pair, or as the smaller side
+    * of a pair whose larger side is even-group (indexed);
+    * q_neardup_filter's oracle shape, so each odd group's minimum
+    * member survives. The keep rule is modality-blind. */
+  private def neardupFilterOracle(fpCtes: String): String =
+    s"""WITH $fpCtes,
+         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+                   FROM fp a JOIN fp b ON a.doc_id < b.doc_id
+                   WHERE bit_count(xor(a.f, b.f)) <= 3),
+         dropped AS (
+           SELECT doc_b AS doc_id FROM pairs
+           WHERE ((doc_b // 10) // 3) % 2 = 1
+           UNION
+           SELECT doc_a FROM pairs
+           WHERE ((doc_a // 10) // 3) % 2 = 1
+             AND ((doc_b // 10) // 3) % 2 = 0)
+         SELECT doc_id FROM fp
+         WHERE ((doc_id // 10) // 3) % 2 = 1
+           AND doc_id NOT IN (SELECT doc_id FROM dropped)"""
 
   /** Cross-modality id offsets for the unified media keep row — far
     * above any doc_id at every shipped SF (ids are dense row numbers),
@@ -584,42 +626,10 @@ object MediaQueries {
     //    in and fingerprints extract INSIDE the face (its contract);
     //    the micro-batch/index-accumulation twin is spec-gated
     //    (FingerprintDedupStreamSpec).
-    QuerySpec("q_image_neardup_filter", (s, dir) => {
-      import s.implicits._
-      val pngs = imageDedupPngs(s, dir)
-      val fp: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame =
-        b => graft.ext.ImageHash.fingerprints(
-          Multimodal.attach(b, "doc_id", "png", "png")
-            .as[Multimodal.MediaRow])
-          .select(col("media_id").as("doc_id"), col("dhash"))
-      val corpusFps =
-        fp(pngs.filter(expr("((doc_id div 10) div 3) % 2 = 0")))
-          .localCheckpoint()
-      graft.streaming.FingerprintDedupStream.filterBatch(corpusFps,
-        pngs.filter(expr("((doc_id div 10) div 3) % 2 = 1")), fp,
-        "doc_id", "dhash", maxHamming = 3)
-        .select(col("doc_id"))
-    },
-      // the stream's keep-min drop policy over the image pair set: an
-      // odd-GROUP (batch) image drops as the larger side of ANY pair, or
-      // as the smaller side of a pair whose larger side is even-group
-      // (indexed) — q_neardup_filter's oracle shape on the banded-
-      // Hamming family; each odd group's minimum member survives
-      s"""WITH ${imageFpCtes()},
-         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-                   FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-                   WHERE bit_count(xor(a.f, b.f)) <= 3),
-         dropped AS (
-           SELECT doc_b AS doc_id FROM pairs
-           WHERE ((doc_b // 10) // 3) % 2 = 1
-           UNION
-           SELECT doc_a FROM pairs
-           WHERE ((doc_a // 10) // 3) % 2 = 1
-             AND ((doc_b // 10) // 3) % 2 = 0)
-         SELECT doc_id FROM fp
-         WHERE ((doc_id // 10) // 3) % 2 = 1
-           AND doc_id NOT IN (SELECT doc_id FROM dropped)"""),
+    QuerySpec("q_image_neardup_filter", (s, dir) =>
+      neardupFilter(s, imageDedupPngs(s, dir), "png",
+        graft.ext.ImageHash.fingerprints, "dhash"),
+      neardupFilterOracle(imageFpCtes())),
 
     // ── The same streaming-ingest batch face for AUDIO: raw RIFF clips
     //    in, energy-contour fingerprints extracted inside, arrivals
@@ -627,72 +637,16 @@ object MediaQueries {
     //    arrival) sits within Hamming 3 — FingerprintDedupStream is
     //    modality-blind, so this row pins that claim on a second
     //    fingerprint family end-to-end.
-    QuerySpec("q_audio_neardup_filter", (s, dir) => {
-      import s.implicits._
-      val wavs = audioDedupWavs(s, dir)
-      val fp: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame =
-        b => graft.ext.AudioHash.fingerprints(
-          Multimodal.attach(b, "doc_id", "wav", "wav")
-            .as[Multimodal.MediaRow])
-          .select(col("media_id").as("doc_id"), col("ahash"))
-      val corpusFps =
-        fp(wavs.filter(expr("((doc_id div 10) div 3) % 2 = 0")))
-          .localCheckpoint()
-      graft.streaming.FingerprintDedupStream.filterBatch(corpusFps,
-        wavs.filter(expr("((doc_id div 10) div 3) % 2 = 1")), fp,
-        "doc_id", "ahash", maxHamming = 3)
-        .select(col("doc_id"))
-    },
-      // the image filter oracle with the audio/video fingerprint replays
-      // swapped in — FingerprintDedupStream's keep rule is modality-blind
-      s"""WITH ${audioFpCtes()},
-         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-                   FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-                   WHERE bit_count(xor(a.f, b.f)) <= 3),
-         dropped AS (
-           SELECT doc_b AS doc_id FROM pairs
-           WHERE ((doc_b // 10) // 3) % 2 = 1
-           UNION
-           SELECT doc_a FROM pairs
-           WHERE ((doc_a // 10) // 3) % 2 = 1
-             AND ((doc_b // 10) // 3) % 2 = 0)
-         SELECT doc_id FROM fp
-         WHERE ((doc_id // 10) // 3) % 2 = 1
-           AND doc_id NOT IN (SELECT doc_id FROM dropped)"""),
+    QuerySpec("q_audio_neardup_filter", (s, dir) =>
+      neardupFilter(s, audioDedupWavs(s, dir), "wav",
+        graft.ext.AudioHash.fingerprints, "ahash"),
+      neardupFilterOracle(audioFpCtes())),
 
     // ── And for VIDEO: MJPEG clips through the real per-frame decode.
-    QuerySpec("q_video_neardup_filter", (s, dir) => {
-      import s.implicits._
-      val avis = videoDedupAvis(s, dir)
-      val fp: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame =
-        b => graft.ext.VideoHash.fingerprints(
-          Multimodal.attach(b, "doc_id", "avi", "avi")
-            .as[Multimodal.MediaRow])
-          .select(col("media_id").as("doc_id"), col("vhash"))
-      val corpusFps =
-        fp(avis.filter(expr("((doc_id div 10) div 3) % 2 = 0")))
-          .localCheckpoint()
-      graft.streaming.FingerprintDedupStream.filterBatch(corpusFps,
-        avis.filter(expr("((doc_id div 10) div 3) % 2 = 1")), fp,
-        "doc_id", "vhash", maxHamming = 3)
-        .select(col("doc_id"))
-    },
-      s"""WITH ${videoFpCtes()},
-         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-                   FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-                   WHERE bit_count(xor(a.f, b.f)) <= 3),
-         dropped AS (
-           SELECT doc_b AS doc_id FROM pairs
-           WHERE ((doc_b // 10) // 3) % 2 = 1
-           UNION
-           SELECT doc_a FROM pairs
-           WHERE ((doc_a // 10) // 3) % 2 = 1
-             AND ((doc_b // 10) // 3) % 2 = 0)
-         SELECT doc_id FROM fp
-         WHERE ((doc_id // 10) // 3) % 2 = 1
-           AND doc_id NOT IN (SELECT doc_id FROM dropped)"""),
+    QuerySpec("q_video_neardup_filter", (s, dir) =>
+      neardupFilter(s, videoDedupAvis(s, dir), "avi",
+        graft.ext.VideoHash.fingerprints, "vhash"),
+      neardupFilterOracle(videoFpCtes())),
 
     // ── UNIFIED cross-modality keep-one policy: image, audio, and
     //    video near-dup pair graphs (disjoint id spaces via fixed

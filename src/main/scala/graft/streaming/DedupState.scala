@@ -3,8 +3,9 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Shared persistence discipline for per-batch accumulated dedup state —
   * the single-table [[graft.model.WaveTable]] wave layout (`""` = waves
@@ -151,27 +152,22 @@ private[streaming] object DedupState {
   def absorbed(spark: SparkSession, indexPath: String, eff: Long): Boolean =
     eff <= graft.model.WaveManifest.compactedThrough(spark, indexPath)
 
-  /** The wave set batch `eff` may probe as its corpus: the PINNED
-    * manifest snapshot restricted to stream waves strictly below `eff`
-    * (so a retry — for which this or a LATER batch's dir may already
-    * exist — computes against the same corpus state as the first
-    * attempt) plus every compaction wave (a compacted wave only ever
-    * absorbs batches below the watermark, which the [[absorbed]] guard
-    * proved is below `eff`). Manifest-less legacy index: dir listing. */
-  def corpusWaves(spark: SparkSession, indexPath: String,
-      eff: Long): Seq[Long] =
-    graft.model.WaveManifest.pinned(spark, indexPath)
+  /** The corpus frame batch `eff` may probe, None when no wave
+    * qualifies (first batch of a fresh index): the PINNED manifest
+    * snapshot restricted to stream waves strictly below `eff` (so a
+    * retry — for which this or a LATER batch's dir may already exist —
+    * computes against the same corpus state as the first attempt) plus
+    * every compaction wave (a compacted wave only ever absorbs batches
+    * below the watermark, which the [[absorbed]] guard proved is below
+    * `eff`). Manifest-less legacy index: dir listing. */
+  private def corpusFor(spark: SparkSession, indexPath: String,
+      eff: Long): Option[DataFrame] = {
+    val waves = graft.model.WaveManifest.pinned(spark, indexPath)
       .map(_.filter(w =>
         w < eff || w >= graft.model.WaveManifest.CompactBase))
       .getOrElse(existingBatches(spark, indexPath).filter(_ < eff))
-
-  /** The corpus frame for batch `eff`, or None when no wave qualifies
-    * (first batch of a fresh index). */
-  def corpusFor(spark: SparkSession, indexPath: String,
-      eff: Long): Option[DataFrame] = {
-    val waves = corpusWaves(spark, indexPath, eff)
-    if (waves.isEmpty) None
-    else Some(graft.model.WaveTable(indexPath).read(spark, Some(waves))())
+    Option.when(waves.nonEmpty)(
+      graft.model.WaveTable(indexPath).read(spark, Some(waves))())
   }
 
   /** Data landed for `eff` — make it visible (skipped on a replay of an
@@ -215,14 +211,135 @@ private[streaming] object DedupState {
     * The greedy keep-min rule applied per batch — conservative on
     * in-batch chains, the right bias for an ingest filter; exact
     * cluster-level keep-one remains the batch operators' job. */
-  def droppedIds(pairs: DataFrame, batchIds: DataFrame,
+  private def droppedIds(pairs: DataFrame, batchIdx: DataFrame,
       idCol: String): DataFrame = {
+    val batchIds = batchIdx.select(col(idCol))
     val dropA = pairs.join(batchIds.withColumnRenamed(idCol, "doc_b"),
       Seq("doc_b"), "left_anti")
       .select(col("doc_a").as(idCol))
     val dropB = pairs.select(col("doc_b").as(idCol))
       .join(batchIds, Seq(idCol), "left_semi")
     dropA.unionByName(dropB).distinct()
+  }
+
+  /** The near-dup ingest cycle of [[StreamingNearDup]] (text minhash)
+    * and [[FingerprintDedupStream]] (63-bit media fingerprints), written
+    * once. A face supplies only what differs: `index` builds a batch's
+    * index rows (`idCol` + what `pairs` reads; the ONE pass over the raw
+    * batch), `pairs` is its incremental pair generator (corpus index,
+    * batch index) → oriented pairs, and `indexable` marks the index rows
+    * that may pair and enter the corpus.
+    *
+    * State lives in the index parquet, NOT the Spark state store: the
+    * stream is restartable from the files alone, survivors accumulate
+    * across runs, and a batch compaction pass can rewrite the index
+    * without touching the stream — the same per-run-upsert vs
+    * periodic-GC split as the reference's ingestion (§2.10). */
+  final case class NearDup(idCol: String, index: DataFrame => DataFrame,
+      pairs: (DataFrame, DataFrame) => DataFrame, indexable: Column) {
+
+    private def probe(corpusIdx: DataFrame, batchIdx: DataFrame) =
+      pairs(corpusIdx.filter(indexable), batchIdx.filter(indexable))
+
+    /** BATCH face: the rows of `batch` that survive [[ingest]]'s drop
+      * policy against a prebuilt corpus index. */
+    def filterBatch(corpusIdx: DataFrame, batch: DataFrame): DataFrame = {
+      val batchIdx = index(batch).localCheckpoint()
+      batch.join(droppedIds(probe(corpusIdx, batchIdx), batchIdx, idCol),
+        Seq(idCol), "left_anti")
+    }
+
+    /** One micro-batch at its run-scoped EFFECTIVE id `eff`: a no-op
+      * when a compaction absorbed it; else build the batch index
+      * (checkpointed), await `gate`, probe the pinned corpus
+      * ([[corpusFor]]), drop per keep-min ([[droppedIds]]), land the
+      * survivors' indexable rows as `batch=<eff>` concurrently with the
+      * sinks, then commit and auto-compact at `compactEvery`. Idempotent
+      * under replay with the same `eff`; rows outside `indexable`
+      * survive the filter but never enter the corpus state.
+      *
+      * `gate` (the caller's batch-level admission audit, e.g. the
+      * QualityGate) runs CONCURRENTLY with the index build and is
+      * awaited before the corpus probe and any write — a refused batch
+      * costs one wasted index job and touches neither index. */
+    def ingest(batch: DataFrame, indexPath: String, eff: Long,
+        onSurvivors: (DataFrame, Long) => Unit,
+        onDuplicates: (DataFrame, Long) => Unit,
+        compactEvery: Int, gate: () => Boolean): Unit = {
+      val spark = batch.sparkSession
+      if (absorbed(spark, indexPath, eff)) return
+      // a malformed batch the audit is about to refuse can CRASH the
+      // index build first. Await the gate on failure: a
+      // refused batch still routes to quarantine (return false-path)
+      // instead of killing the stream; a gate-PASSING batch's index
+      // failure is a real error and rethrows.
+      val batchIdx = try index(batch).localCheckpoint() catch {
+        case scala.util.control.NonFatal(e) => if (gate()) throw e else return
+      }
+      if (!gate()) return
+      val corpusIdx = corpusFor(spark, indexPath, eff)
+        .getOrElse(batchIdx.limit(0))
+      val pairs = probe(corpusIdx, batchIdx).localCheckpoint()
+      val drop = droppedIds(pairs, batchIdx, idCol)
+      val survivors = batch.join(drop, Seq(idCol), "left_anti")
+      val survivorIdx = batchIdx.filter(indexable)
+        .join(drop, Seq(idCol), "left_anti")
+      // land the survivor-index wave CONCURRENTLY with the sinks: the
+      // sinks read `survivors`/`pairs`, which derive from
+      // the checkpointed batch/pairs frames, not from the index write —
+      // the two index families' waves are independent until each one's
+      // own manifest commit, and every crash interleaving (neither /
+      // either / both landed) is repaired by the at-least-once replay
+      // rewriting both waves byte-identically under the same eff.
+      graft.model.ConcurrentJobs.awaitAll(
+        () => {
+          graft.model.WaveTable(indexPath).write(survivorIdx, eff)
+          commitAndMaybeCompact(spark, indexPath, eff, compactEvery)
+        },
+        () => {
+          onDuplicates(pairs, eff)
+          onSurvivors(survivors, eff)
+        })
+    }
+
+    /** The streaming face: [[ingest]] every micro-batch with rows under
+      * the run-scoped base (resolved on the run's first non-empty batch).
+      * @param indexPath    index location (created on first batch if absent)
+      * @param onSurvivors  (survivingRows, effectiveBatchId) sink
+      * @param onDuplicates (pairs, effectiveBatchId) sink — the near-dup
+      *                     evidence for every dropped doc
+      * @param compactEvery > 0 auto-compacts whenever the pinned wave
+      *                     count reaches it (same foreachBatch thread —
+      *                     the compactor never races ingest) */
+    def stream(docs: DataFrame, indexPath: String, trigger: Trigger,
+        onSurvivors: (DataFrame, Long) => Unit,
+        onDuplicates: (DataFrame, Long) => Unit,
+        compactEvery: Int): DataStreamWriter[Row] =
+      WaveStream.eachBatch(docs, indexPath, trigger) { (batch, eff) =>
+        ingest(batch, indexPath, eff, onSurvivors, onDuplicates,
+          compactEvery, () => true)
+      }
+  }
+
+  /** The serve and lifecycle faces both near-dup indexes share. */
+  trait IndexFaces {
+
+    /** The index as a PINNED SNAPSHOT — the serve face for external
+      * readers; `pin` overrides the pointer for time travel. */
+    def index(spark: SparkSession, indexPath: String,
+        pin: Option[Seq[Long]] = None): DataFrame =
+      graft.model.WaveTable(indexPath).read(spark, pin)()
+
+    /** Collapse the pinned waves into ONE compaction-space wave (returned)
+      * — index rows are disjoint across waves (each doc survived exactly
+      * one batch), so every later probe sees the identical corpus. */
+    def compact(spark: SparkSession, indexPath: String): Long =
+      graft.model.WaveTable(indexPath).compactRows(spark)
+
+    /** Retention: reclaim every wave dir no manifest version references. */
+    def expire(spark: SparkSession, indexPath: String,
+        keepVersions: Int): Seq[Long] =
+      graft.model.WaveTable(indexPath).expire(spark, keepVersions)
   }
 
   /** The streaming query id Spark sets on the foreachBatch execution

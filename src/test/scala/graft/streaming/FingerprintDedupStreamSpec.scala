@@ -131,4 +131,25 @@ class FingerprintDedupStreamSpec extends SparkSpec {
     // and a fresh run bases itself past the burned watermark
     assert(DedupState.resolveBase(spark, dir, "qFresh") == 3L)
   }
+
+  test("a fingerprint extraction that throws propagates and leaves the " +
+      "index untouched") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("fpdedup3").toString + "/idx"
+    var sinkCalls = 0
+    def drive(fingerprint: DataFrame => DataFrame, data: Seq[(Long, Long)],
+        eff: Long): Unit =
+      FingerprintDedupStream.processBatch(data.toDF("doc_id", "fp"),
+        fingerprint, "doc_id", "fp", dir, maxHamming = 3, eff = eff,
+        onSurvivors = (_, _) => sinkCalls += 1,
+        onDuplicates = (_, _) => sinkCalls += 1)
+    drive(ident, b0, 0L)
+    def state = (graft.model.WaveManifest.latestVersion(spark, dir),
+      new java.io.File(dir).list().filter(_.startsWith("batch=")).toSeq.sorted,
+      sinkCalls)
+    val before = state
+    intercept[IllegalStateException](drive(
+      _ => throw new IllegalStateException("undecodable batch"), b1, 1L))
+    assert(state == before, state.toString)
+  }
 }

@@ -213,7 +213,7 @@ class StreamingNearDupSpec extends SparkSpec {
     assert(StreamingNearDup.index(spark, dir)
       .select("doc_id").as[Long].collect().toSet == before + 21L)
     // and a fresh run bases itself past the burned watermark, not at 0
-    assert(StreamingNearDup.resolveBase(spark, dir, "qFresh") == 3L)
+    assert(DedupState.resolveBase(spark, dir, "qFresh") == 3L)
   }
 
   test("auto-compaction in the maintenance loop never loses survivors") {
@@ -235,20 +235,44 @@ class StreamingNearDupSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet == Set(1L, 3L, 5L, 31L))
   }
 
+  test("an index build that throws awaits the gate: a refused batch " +
+      "returns cleanly, a passing one rethrows; neither touches the index") {
+    val dir = java.nio.file.Files.createTempDirectory("neardup8").toString + "/idx"
+    runBatch(dir, b0, 0L)
+    def state = (graft.model.WaveManifest.latestVersion(spark, dir),
+      new java.io.File(dir).list().filter(_.startsWith("batch=")).toSeq.sorted)
+    val before = state
+    var sinkCalls = 0
+    var gateCalls = 0
+    // no text column: the minhash index step fails at analysis
+    def malformed(gate: Boolean): Unit = StreamingNearDup.processBatch(
+      Seq(7L, 8L).toDF("doc_id"), "doc_id", "text", dir,
+      shingleN = 3, numHashes = 12, bandSize = 4, threshold = 0.5,
+      eff = 1L, onSurvivors = (_, _) => sinkCalls += 1,
+      onDuplicates = (_, _) => sinkCalls += 1,
+      gate = () => { gateCalls += 1; gate })
+    malformed(gate = false)
+    assert(gateCalls == 1 && sinkCalls == 0)
+    assert(state == before, state.toString)
+    intercept[org.apache.spark.sql.AnalysisException](malformed(gate = true))
+    assert(gateCalls == 2 && sinkCalls == 0)
+    assert(state == before, state.toString)
+  }
+
   test("resolveBase: restart keeps a query's base; a new query lands past the index") {
     val dir = java.nio.file.Files.createTempDirectory("neardup4").toString + "/idx"
     // empty index: first query starts at base 0
-    assert(StreamingNearDup.resolveBase(spark, dir, "qA") == 0L)
+    assert(DedupState.resolveBase(spark, dir, "qA") == 0L)
     // simulate qA having written batches 0..2
     Seq((1L, base)).toDF("doc_id", "text").write
       .parquet(s"$dir/batch=2")
     // checkpoint restart of qA: the recorded base wins, so a replayed
     // epoch rewrites the SAME dir it wrote before
-    assert(StreamingNearDup.resolveBase(spark, dir, "qA") == 0L)
+    assert(DedupState.resolveBase(spark, dir, "qA") == 0L)
     // a different query (fresh checkpoint, epochs from 0) is based past
     // every existing batch
-    assert(StreamingNearDup.resolveBase(spark, dir, "qB") == 3L)
+    assert(DedupState.resolveBase(spark, dir, "qB") == 3L)
     // and that assignment is itself sticky across qB's restarts
-    assert(StreamingNearDup.resolveBase(spark, dir, "qB") == 3L)
+    assert(DedupState.resolveBase(spark, dir, "qB") == 3L)
   }
 }
