@@ -25,6 +25,8 @@ class QueryBudgetSpec extends SparkSpec {
     "q_minhash_lsh" -> (12, 3),
     "q_components_adaptive" -> (61, 1),
     "q_pq_codes" -> (21, 2),
+    "q_kmeans" -> (16, 2),
+    "q_ann_ivf_dist" -> (7, 3),
     "q_bm25" -> (6, 2),
     "q_image_dedup" -> (6, 2),
     "q_contamination" -> (5, 3),
