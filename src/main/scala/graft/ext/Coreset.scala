@@ -47,19 +47,8 @@ object Coreset {
     // exchange, and a vid-join back into dmin. Same exact BIGINT
     // Σ(q−q')² on the shared 10⁻⁶ grid, same lowest-id ties — picks
     // and radii are bit-identical (oracle-re-proven).
-    // Validation is PqIndex.comps' contract, verbatim: loud on empty,
-    // null vectors, and ragged dimensions.
-    val stats = vecs.select(size(col(vecCol)).as("d"))
-      .agg(min(col("d")).as("mn"), max(col("d")).as("mx"),
-        count(lit(1)).as("n"),
-        count(when(col("d").isNull || col("d") < 0, 1)).as("n_null"))
-      .head()
-    require(stats.getLong(2) > 0, "Coreset needs a non-empty vector frame")
-    require(stats.getLong(3) == 0L,
-      s"Coreset: ${stats.getLong(3)} row(s) carry a NULL $vecCol")
-    val dim = stats.getInt(0)
-    require(dim == stats.getInt(1),
-      s"Coreset: ragged vectors (dims $dim..${stats.getInt(1)})")
+    val (rows, dim) = PqIndex.vectorShape(vecs, vecCol, "Coreset")
+    require(rows > 0, "Coreset needs a non-empty vector frame")
     // (vid, qs): the 10⁻⁶-grid quantization, one array per point; the
     // parallelism floor keeps the per-round arithmetic off a single
     // under-split scan task (no-op at production row-group counts)

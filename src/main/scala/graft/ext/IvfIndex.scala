@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -59,6 +59,49 @@ object IvfIndex {
             .parquet(s"$path/centroids"))
       }
     }
+
+    /** The nearest-list rule as a per-row column: the `n` lists nearest
+      * the vector column `vec`, nearest first — the rule below
+      * (`IvfIndex.nearestLists`) applied in-row on the executors over
+      * the driver-resident centroid array.
+      * Every face that picks lists (insert, both searches, range probe)
+      * goes through here, so a row always lands in a list its own probe
+      * scans. */
+    def nearestLists(vec: Column, n: Int): Column = {
+      // capture the array only: the model holds a DataFrame
+      val cents = centroids
+      udf((q: Seq[java.lang.Double]) => IvfIndex.nearestLists(cents, q, n))
+        .apply(vec.cast("array<double>"))
+    }
+  }
+
+  /** The one IVF list-distance rule: the `n` lists nearest `qv`.
+    * d = Σ(c−q)² over the centroid's dims, folded left to right in
+    * double; a longer vector is truncated to the centroid dims (the
+    * sign quantizer's centroids cover only the leading `bits` dims). A
+    * NaN component becomes 1e6: the SQL engines order NaN above every
+    * number, which [[Similarity.signBucket]]'s `> 0` follows, and a
+    * large-but-moderate stand-in keeps that — sign-pattern centroids
+    * with the bit SET win, and k-means centroids order by their
+    * component size. 1e6, not 1e30: the stand-in must dominate real
+    * coordinates yet keep (c ± stand-in)² distinguishable in double.
+    * Ties go to the lower list id. A NULL vector, a NULL component or a
+    * vector shorter than the centroids has no defined distance and is
+    * refused by name (a null distance would file it under an arbitrary
+    * list that no probe for it scans). */
+  private def nearestLists(cents: Array[(Int, Array[Double])],
+      qv: Seq[java.lang.Double], n: Int): Seq[Int] = {
+    require(qv != null, "IvfIndex: a NULL vector has no nearest list")
+    require(!qv.contains(null),
+      "IvfIndex: a vector with a NULL component has no nearest list")
+    val q = qv.map(x => if (x.isNaN) 1e6 else x.doubleValue).toArray
+    cents.map { case (lid, c) =>
+      require(q.length >= c.length, s"IvfIndex: a ${q.length}-dim " +
+        s"vector is shorter than the ${c.length}-dim centroids")
+      (lid, c.zip(q).map { case (x, y) => (x - y) * (x - y) }.sum)
+    }.sortBy { case (lid, d) => (d, lid) }(
+      Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))
+      .take(n).map(_._1).toSeq
   }
 
   /** The wave store under an index: `lists/` partitioned (batch,
@@ -151,54 +194,25 @@ object IvfIndex {
   }
 
   /** Assign NEW vectors to an EXISTING model's lists WITHOUT refitting
-    * the quantizer — the index INSERT path. Each new row scores against
-    * the (tiny, broadcast) centroid table and keeps its minimum-distance
-    * list, ties broken by the lowest list id — the same rule as
-    * `search`'s driver-side probe selection, so an appended row lands in
-    * exactly the list a probe for it will scan. For a [[buildSign]]
-    * model this reproduces the sign bucket bit-for-bit (equal-norm
-    * centroids: argmin distance = matching sign pattern; an exact-zero
-    * dim ties toward the lower id, which is what the `> 0` test assigns).
-    * Row blowup is bounded by the centroid count — the same budget every
-    * probe pays. Returns the newly assigned rows in the index layout
-    * (`neighbor_id, cv, list_id, cn`); persist with [[appendSave]] or
-    * union into the in-memory model with [[append]].
+    * the quantizer — the index INSERT path. Each new row keeps the first
+    * list of the nearest-list rule ([[IvfModel.nearestLists]]), the
+    * rule every probe applies, so an appended row lands in exactly the
+    * list a probe for it will scan. For a [[buildSign]] model this
+    * reproduces the sign bucket bit-for-bit (equal-norm centroids:
+    * argmin distance = matching sign pattern; an exact-zero dim ties
+    * toward the lower id, which is what the `> 0` test assigns). One
+    * narrow projection: no join, no window. Returns the newly assigned
+    * rows in the index layout (`neighbor_id, cv, cn, list_id`); persist
+    * with [[appendSave]] or union into the in-memory model with
+    * [[append]].
     */
   def assignTo(model: IvfModel, newRows: DataFrame, idCol: String,
-      vecCol: String): DataFrame = {
-    val spark = newRows.sparkSession
-    import spark.implicits._
-    val cents = model.centroids.toSeq.toDF("list_id", "centroid")
-    // NaN components get the same 1e6 stand-in `search`'s probe selection
-    // applies: DecimalDot would return null for a NaN operand, making
-    // every centroid distance null and the row_number tie-break assign
-    // list 0 — while signBucket's `> 0` (Spark NaN-is-greatest) and the
-    // search-side guard both pick the bit-SET bucket. Without this, a
-    // NaN vector appended via assignTo would land in a list no probe for
-    // it scans.
-    val qsRaw =
-      slice(col("cv").cast("array<double>"), lit(1), size(col("centroid")))
-    val qs = transform(qsRaw,
-      x => when(isnan(x), lit(1e6)).otherwise(x))
-    // d = |q|² − 2q·c + |c|² over the centroid's dims (zip-truncated,
-    // like the probe selection); each dot is the exact decimal fold, so
-    // ties are exact, not float-accumulation artifacts
-    val d = Similarity.dot(qs, qs) -
-      lit(2.0) * Similarity.dot(qs, col("centroid")) +
-      Similarity.dot(col("centroid"), col("centroid"))
-    val w = Window.partitionBy(col("neighbor_id"))
-      .orderBy(col("d"), col("list_id"))
+      vecCol: String): DataFrame =
     newRows
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("d", d)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
-      .select(col("neighbor_id"), col("cv"),
-        col("list_id").cast("int").as("list_id"))
+      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+        model.nearestLists(col(vecCol), 1).getItem(0).as("list_id"))
       .withColumn("cn", sqrt(Similarity.dot(col("cv"), col("cv"))))
       .select(col("neighbor_id"), col("cv"), col("cn"), col("list_id"))
-  }
 
   /** In-memory insert: the existing model plus newly assigned rows. */
   def append(model: IvfModel, newRows: DataFrame, idCol: String,
@@ -256,46 +270,26 @@ object IvfIndex {
 
   /** Top-k cosine neighbors probing the `nProbe` nearest lists per query.
     * Reuses a prebuilt model — no quantizer fit here. `queries` must be
-    * small (a probe batch): its list selection is computed driver-side
-    * against the (tiny) centroid set; the bounded `.collect()` is the
-    * probe batch, never the corpus. */
+    * small (a probe batch): the nearest-list rule runs on the executors
+    * and its (query_id, list_id) pairs are collected — the bounded
+    * `.collect()` is queries × nProbe ints, never the corpus. */
   def search(model: IvfModel, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nProbe: Int): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
 
-    // driver-side probe-list selection for the small query batch; decode
-    // with explicit casts so any numeric id / float-or-double vector
-    // schema round-trips (not just bigint + array<float>)
     val probePairs = queries
       .select(col(idCol).cast("long").as("query_id"),
-        col(vecCol).cast("array<double>").as("qv"))
-      .as[(Long, Array[Double])].collect()
-      .flatMap { case (qid, qv) =>
-        // a NaN component would poison every centroid distance to NaN and
-        // the stable sort would always pick list 0 — diverging from the
-        // SQL engines' NaN-is-greatest comparison semantics that
-        // signBucket's `> 0` test (and so the bucket the row was indexed
-        // under) follows. A large-but-moderate positive stand-in keeps
-        // the selection consistent: sign-pattern centroids with that bit
-        // SET win, and k-means centroids order by their component size.
-        // 1e6, not 1e30: the stand-in must dominate real coordinates yet
-        // keep (c ± stand-in)² distinguishable in double (at 1e30 the
-        // ±1 centroid difference falls below one ulp and ties).
-        val q = qv.map(x => if (x.isNaN) 1e6 else x)
-        model.centroids.map { case (lid, c) =>
-          val d = c.zip(q).map { case (x, y) => (x - y) * (x - y) }.sum
-          (qid, lid, d)
-        }.sortBy(_._3).take(nProbe).map { case (qid2, lid, _) => (qid2, lid) }
-      }.toSeq
+        explode(model.nearestLists(col(vecCol), nProbe)).as("list_id"))
+      .as[(Long, Int)].collect().toSeq
     val queriesDf = queries
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
       .withColumn("qn", sqrt(Similarity.dot(col("qv"), col("qv"))))
     val probes = probePairs.toDF("query_id", "list_id")
       .join(queriesDf, Seq("query_id"))
 
-    // The probed list set is already driver-resident (it came out of the
-    // centroid scan above) — filter it STATICALLY so a partitioned on-disk
+    // The probed list set is already driver-resident (it came back with
+    // the pairs above) — filter it STATICALLY so a partitioned on-disk
     // index prunes to exactly the probed partitions at plan time, with no
     // reliance on dynamic partition pruning kicking in through the join.
     val probedLists = probePairs.map(_._2).distinct.sorted
@@ -314,11 +308,10 @@ object IvfIndex {
   }
 
   /** [[search]] with DISTRIBUTED probe-list selection: the query batch
-    * never touches the driver. Each query row scores against the (tiny,
-    * broadcast) centroid table and keeps its `nProbe` minimum-distance
-    * lists — the same argmin/tie rule (distance, then list id) and the
-    * same NaN stand-in as `search`'s driver-side selection and
-    * [[assignTo]]'s insert path, so the two faces probe identical lists.
+    * never touches the driver. Each query row explodes the first
+    * `nProbe` lists of the nearest-list rule in-row, so this face,
+    * `search` and [[assignTo]]'s insert path use one rule and probe
+    * identical lists.
     *
     * Use this when the probe batch itself is large (bulk re-scoring, an
     * offline join of one corpus against another): `search`'s bounded
@@ -336,30 +329,10 @@ object IvfIndex {
   def searchDistributed(model: IvfModel, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nProbe: Int,
       broadcastProbes: Boolean = true): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val cents = model.centroids.toSeq.toDF("list_id", "centroid")
-    // same distance form as assignTo: d = |q|² − 2q·c + |c|² over the
-    // centroid's dims (zip-truncated, like the driver-side selection),
-    // exact decimal folds, NaN components replaced by search's 1e6
-    // stand-in so selection matches the bucket the row was indexed under
-    val qsRaw =
-      slice(col("qv").cast("array<double>"), lit(1), size(col("centroid")))
-    val qs = transform(qsRaw, x => when(isnan(x), lit(1e6)).otherwise(x))
-    val d = Similarity.dot(qs, qs) -
-      lit(2.0) * Similarity.dot(qs, col("centroid")) +
-      Similarity.dot(col("centroid"), col("centroid"))
-    val wSel = Window.partitionBy(col("query_id"))
-      .orderBy(col("d"), col("list_id"))
     val probes0 = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+      .select(explode(model.nearestLists(col(vecCol), nProbe)).as("list_id"),
+        col(idCol).as("query_id"), col(vecCol).as("qv"))
       .withColumn("qn", sqrt(Similarity.dot(col("qv"), col("qv"))))
-      .crossJoin(broadcast(cents))
-      .withColumn("d", d)
-      .withColumn("rk", row_number().over(wSel))
-      .filter(col("rk") <= nProbe)
-      .select(col("list_id").cast("int").as("list_id"),
-        col("query_id"), col("qv"), col("qn"))
     val probes = if (broadcastProbes) broadcast(probes0) else probes0
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))

@@ -33,8 +33,8 @@ import org.apache.spark.sql.functions._
   * argmin per training round ([[PqIndex.codebooksFromComps]] — the
   * residual frame is materialized once and re-joined); encode is one
   * pass. Serving: probe selection is a broadcast-centroid argmin join
-  * over the query batch (the [[IvfIndex.searchDistributed]] posture —
-  * queries never touch the driver), the ADC table is queries × nProbe
+  * over the query batch on the integer grid (queries never touch the
+  * driver), the ADC table is queries × nProbe
   * × m × k rows (broadcast), and the per-(query, vid) sum
   * partial-aggregates map-side. Because a vector's codes live under
   * its `list_id`, a persisted code table in the [[IvfIndex]]

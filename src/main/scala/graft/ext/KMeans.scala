@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Integer-exact distributed Lloyd k-means over an embedding column —
@@ -14,99 +13,28 @@ import org.apache.spark.sql.functions._
   * Every quantity is exact BIGINT arithmetic on a 10⁻⁶-quantized grid,
   * so the result is bit-reproducible across engines and partitionings —
   * a float Lloyd's (e.g. MLlib's) is neither (sum order varies per
-  * shuffle) and cannot be oracle-checked. Quantization:
-  * q = round(x·10⁶) half-away-from-zero (both engines' `round`);
-  * distances are exact Σ(q−cq)²; centroid components are the half-up
-  * integer mean floor((2·Σq + n)/(2n)) — the same engine-independent
-  * division idiom as [[TextAnalysis.halfUp4]], exact while
-  * |2·Σq + n| ≲ 2⁵³ (i.e. ~4·10⁹ members per cluster at |x| ≤ 1;
-  * beyond that shard the corpus or rescale the grid).
-  *
-  * Deterministic contracts: init = the k lowest-id vectors (no seeded
-  * RNG — k-means∥ init can layer on top by feeding its survivors in as
-  * `k` ids); assignment ties break to the lowest cluster id
-  * (min(struct(dist, cid))); a cluster that loses every member simply
-  * vanishes (k shrinks) — the SQL replay has the identical semantics
-  * because an empty group is absent from the update aggregate.
-  *
-  * Shape for 100 TB: the quantized component frame (id, pos, q) is
-  * materialized ONCE (localCheckpoint — it is re-joined every round,
-  * and the upstream must not replan; same contract as [[Components]]).
-  * Per round: one BROADCAST join comp⋈centroids on pos (centroids are
-  * k·dim rows — broadcastable for any sane k·dim), one partial-agg
-  * groupBy(id, cid) for distances, one min(struct) argmin aggregate,
-  * and one groupBy(cid, pos) update aggregate. The DATA is never
-  * collected to the driver — only the k·dim-row centroid table
-  * materializes driver-side each round ([[graft.model.LocalModel]]
-  * bounded-model collect, the Gram.fitPca precedent; it was headed
-  * for a broadcast to driver + executors anyway), and the operator
-  * still chains into a plan. The per-round cost is
-  * N·dim·k intermediate rows in the distance aggregate's map side —
-  * map-side combine on (id, cid) keeps the exchange at N·k.
-  *
-  * `rounds` = number of ASSIGNMENT passes (centroids update between
-  * passes, not after the last) — fixed rounds keep the operator
-  * oracle-expressible (unrolled CTEs, same pattern as the integer
-  * PageRank and BPE training).
+  * shuffle) and cannot be oracle-checked. Contract: q = round(x·10⁶)
+  * half-away-from-zero, exact Σ(q−cq)² distances, half-up integer
+  * centroid means, init = the k lowest-id vectors, assignment ties to
+  * the lowest cluster id, a cluster that loses every member vanishes
+  * (k shrinks). `rounds` = number of ASSIGNMENT passes (centroids
+  * update between passes, not after the last) — fixed rounds keep the
+  * operator oracle-expressible (unrolled CTEs). This is PQ training
+  * with one subspace: the loop is [[PqIndex.codebooksFromComps]] and
+  * the final pass [[PqIndex.pivotArgmin]]. Raises on an empty frame
+  * and on NULL or ragged vectors.
   *
   * Emits (vec_id BIGINT, cluster_id INT, sqdist BIGINT): the final
   * assignment with its exact quantized squared distance.
   */
 object KMeans {
 
-  private val GRID = 1000000L
-
   def assignments(vecs: DataFrame, idCol: String, vecCol: String,
       k: Int, rounds: Int): DataFrame = {
-    require(k >= 1 && rounds >= 1, "k and rounds must be >= 1")
-
-    // (vid, pos, q) — quantized components, materialized once
-    // hash-partitioned by vid before the checkpoint: the explode
-    // materializes in parallel (the under-split-scan floor) with the
-    // blocks hash(vid)-placed; the partitioning is deliberately NOT
-    // re-declared above the checkpoint — measured slower across the
-    // PQ family (see PqIndex.partitionedComps)
-    val comp = vecs
-      .select(col(idCol).cast("long").as("vid"),
-        posexplode(col(vecCol)).as(Seq("pos", "x")))
-      .select(col("vid"), col("pos"),
-        round(col("x").cast("double") * lit(GRID)).cast("long").as("q"))
-      .repartition(col("vid"))
-      .localCheckpoint()
-
-    // init: cluster c = the (c+1)-th lowest vector id. The k-row limit
-    // is a driver-side sort of ids only, not data.
-    val initIds = vecs.select(col(idCol).cast("long").as("vid"))
-      .distinct().orderBy(col("vid")).limit(k)
-      .withColumn("cid", row_number().over(Window.orderBy(col("vid"))) - 1)
-    // centroids are k·dim rows by construction — localized (driver-
-    // local relation, [[graft.model.LocalModel]]) instead of
-    // checkpointed: one job per round, and the per-round broadcast
-    // joins below build job-free; rows are bit-identical
-    var cent = graft.model.LocalModel.localized(
-      comp.join(broadcast(initIds), "vid")
-        .select(col("cid"), col("pos"), col("q").as("cq")))
-
-    var asg: DataFrame = null
-    (1 to rounds).foreach { r =>
-      // pivoted argmin (PqIndex.pivotArgmin, r19): the centroid row
-      // pivots to one row per pos, all k distance sums run in ONE hash
-      // aggregate and the argmin is in-row — one exchange of N rows
-      // instead of N·k plus a second min pass; same exact BIGINT sums,
-      // same lowest-cid tie rule
-      asg = PqIndex.pivotArgmin(comp, cent, Seq("vid"))
-      if (r < rounds) {
-        asg = asg.localCheckpoint() // feeds both the update and next round
-        cent = graft.model.LocalModel.localized(
-          asg.join(comp, "vid")
-            .groupBy(col("cid"), col("pos"))
-            .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
-            .select(col("cid"), col("pos"),
-              floor((lit(2.0) * col("s") + col("n")) / (lit(2.0) * col("n")))
-                .cast("long").as("cq")))
-      }
-    }
-    asg.select(col("vid").as("vec_id"), col("cid").as("cluster_id"),
-      col("d").as("sqdist"))
+    val comp = PqIndex.partitionedComps(vecs, idCol, vecCol, m = 1)
+    val cent = PqIndex.codebooksFromComps(comp, k, rounds)
+    PqIndex.pivotArgmin(comp, cent, Seq("vid"))
+      .select(col("vid").as("vec_id"), col("cid").as("cluster_id"),
+        col("d").as("sqdist"))
   }
 }

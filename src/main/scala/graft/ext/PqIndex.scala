@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * where the raw vectors never could, and the serve-side join is
   * against an m·k-row broadcast table, not the corpus floats.
   *
-  * Integer-exact discipline ([[KMeans]] verbatim — this operator is
-  * per-subspace Lloyd's and shares its grid): components quantized to
+  * Integer-exact discipline (per-subspace Lloyd's; [[KMeans]] is this
+  * training loop with one subspace): components quantized to
   * q = round(x·10⁶) half-away-from-zero, exact BIGINT Σ(q−cq)²
   * distances, half-up integer centroid means floor((2Σq+n)/(2n)),
   * init = the k lowest vector ids' subvectors (every subspace seeds
@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: all `m` subspaces train in ONE join/aggregate pipeline
   * — `sub` is just another key column, never a driver-side loop. The
   * quantized component frame is materialized once (localCheckpoint,
-  * re-joined every round — the [[KMeans]]/[[Components]] contract);
+  * re-joined every round — the [[Components]] contract);
   * per round one broadcast join comp⋈centroids on the GLOBAL pos key
   * (pos determines sub, so the join key stays one column; centroids
   * are m·k·subDim rows — broadcastable for any sane m·k·D), one
@@ -46,29 +46,45 @@ object PqIndex {
 
   private val GRID = 1000000L
 
+  /** (rows, dim) of a vector frame — the one vector-frame guard:
+    * raises on a NULL vector or ragged dimensions, naming `caller`.
+    * The stats are observed on one scan job (no exchange) over every
+    * row: head() on a first row would let a mixed-dimension frame
+    * through. An empty frame is (0, 0); callers that need rows check
+    * `rows > 0` themselves. */
+  private[ext] def vectorShape(vecs: DataFrame, vecCol: String,
+      caller: String): (Long, Int) = {
+    val obs = org.apache.spark.sql.Observation()
+    // count(*) beside count(v): a frame whose EVERY vector is NULL must
+    // raise, not pass as empty
+    vecs.select(col(vecCol).as("v"))
+      .observe(obs, count(lit(1)).as("n"), count(col("v")).as("nVec"),
+        min(size(col("v"))).as("mn"), max(size(col("v"))).as("mx"))
+      .write.format("noop").mode("overwrite").save()
+    val stats = obs.get
+    val n = stats("n").asInstanceOf[Long]
+    val nNull = n - stats("nVec").asInstanceOf[Long]
+    require(nNull == 0L, s"$caller: $nNull row(s) carry a NULL $vecCol")
+    if (n == 0L) (0L, 0)
+    else {
+      val mn = stats("mn").asInstanceOf[Int]
+      val mx = stats("mx").asInstanceOf[Int]
+      require(mn == mx, s"$caller: ragged vectors (dims $mn..$mx)")
+      (n, mn)
+    }
+  }
+
   /** Quantized components with their subspace: (vid, sub, pos, q).
     * `pos` stays GLOBAL (0-based over the full vector) so downstream
-    * joins key on one column; `sub = pos / (D/m)`. Fails loudly on
-    * ragged/null vectors and on D % m != 0 (the silent alternative
-    * would train a codebook for a subspace that doesn't exist). */
+    * joins key on one column; `sub = pos / (D/m)`. Fails loudly on an
+    * empty frame, ragged/null vectors and on D % m != 0 (the silent
+    * alternative would train a codebook for a subspace that doesn't
+    * exist). */
   private[ext] def comps(vecs: DataFrame, idCol: String, vecCol: String,
       m: Int): DataFrame = {
     require(m >= 1, s"m must be >= 1: $m")
-    // aggregate-validated like EmbedEval.truncationRecall: head() on a
-    // first row would let a mixed-dimension corpus through, and a null
-    // vector would turn the min() into an opaque NPE
-    val stats = vecs.select(size(col(vecCol)).as("d"))
-      .agg(min(col("d")).as("mn"), max(col("d")).as("mx"),
-        count(lit(1)).as("n"),
-        count(when(col("d").isNull || col("d") < 0, 1)).as("n_null"))
-      .head()
-    require(stats.getLong(2) > 0, "PqIndex needs a non-empty vector frame")
-    require(stats.getLong(3) == 0L,
-      s"PqIndex: ${stats.getLong(3)} row(s) carry a NULL $vecCol")
-    val dim = stats.getInt(0)
-    require(dim == stats.getInt(1),
-      s"PqIndex: ragged vectors (dims $dim..${stats.getInt(1)}) — " +
-        "subspace boundaries would differ per row")
+    val (rows, dim) = vectorShape(vecs, vecCol, "PqIndex")
+    require(rows > 0, "PqIndex needs a non-empty vector frame")
     require(dim % m == 0,
       s"PqIndex: dim $dim not divisible by m=$m subspaces")
     val subDim = dim / m
@@ -112,16 +128,16 @@ object PqIndex {
       .repartition(col("vid")).localCheckpoint()
 
   /** The training loop over an already-built component frame (vid, sub,
-    * pos, q) — the entry [[IvfPq]] uses to train codebooks on coarse
-    * RESIDUALS rather than raw vectors (extra columns ride through
-    * untouched). Caller materializes `comp`: it is re-joined every
-    * round. */
+    * pos, q) — the one integer Lloyd's loop: [[KMeans]] runs it with one
+    * subspace, [[IvfPq]] on coarse RESIDUALS rather than raw vectors
+    * (extra columns ride through untouched). Caller materializes
+    * `comp`: it is re-joined every round. */
   private[ext] def codebooksFromComps(comp: DataFrame, k: Int,
       rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, "k and rounds must be >= 1")
     // init: code c of EVERY subspace = the (c+1)-th lowest vector id's
-    // subvector (the KMeans init rule, applied per subspace with the
-    // same ids — deterministic and oracle-replayable with one CTE)
+    // subvector (the same ids in every subspace — deterministic and
+    // oracle-replayable with one CTE)
     val initIds = comp.select(col("vid"))
       .distinct().orderBy(col("vid")).limit(k)
       // single-partition window over at most k rows (the limit above)

@@ -38,34 +38,16 @@ object RangeSearch {
     transform(v, x =>
       round(x.cast("double") * lit(1000000.0)).cast("double"))
 
-  /** Loud input validation (the [[PqIndex.comps]] posture): ragged or
-    * null vectors would silently null out distances and drop pairs. */
-  private def validate(df: DataFrame, vecCol: String, side: String): Unit = {
-    // count(*) separately from the size stats: a min-null early return
-    // would also pass a frame whose EVERY vector is NULL — exactly the
-    // silent-drop this guard exists to catch (review r13, low)
-    val stats = df
-      .agg(count(lit(1)).as("n"), count(col(vecCol)).as("nVec"),
-        min(size(col(vecCol))).as("mn"), max(size(col(vecCol))).as("mx"))
-      .head()
-    val n = stats.getLong(0)
-    if (n == 0L) return // truly empty frame: result is just empty
-    val nNull = n - stats.getLong(1)
-    require(nNull == 0L,
-      s"RangeSearch: $nNull $side row(s) carry a NULL $vecCol")
-    require(stats.getInt(2) == stats.getInt(3),
-      s"RangeSearch: ragged $side vectors " +
-        s"(dims ${stats.getInt(2)}..${stats.getInt(3)})")
-  }
-
   /** All (query_id, neighbor_id, sqdist) with sqdist ≤ r2 on the 10⁻⁶
     * grid, self-pairs excluded, sqdist exact BIGINT. One corpus pass;
     * `queries` must be a small probe batch (it broadcasts). */
   def exact(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, r2: Long): DataFrame = {
     require(r2 >= 0L, s"r2 must be >= 0: $r2")
-    validate(corpus, vecCol, "corpus")
-    validate(queries, vecCol, "query")
+    // ragged or null vectors would silently null out distances and
+    // drop pairs; an empty side just yields no pairs
+    PqIndex.vectorShape(corpus, vecCol, "RangeSearch corpus")
+    PqIndex.vectorShape(queries, vecCol, "RangeSearch query")
     val q = queries.select(col(idCol).cast("long").as("query_id"),
         grid(col(vecCol)).as("gq"))
       .withColumn("qq", Similarity.dot(col("gq"), col("gq")))
@@ -80,38 +62,6 @@ object RangeSearch {
       .select(col("query_id"), col("neighbor_id"), col("sqdist"))
   }
 
-  /** (query_id, list_id): each query's `nProbe` minimum-distance IVF
-    * lists, selected DISTRIBUTED — every query row scores the (tiny,
-    * broadcast) centroid table and a per-query window keeps the nProbe
-    * nearest; the query batch never touches the driver. Arithmetic is
-    * the SAME double fold as [[IvfIndex.search]]'s driver-side rule
-    * (left-to-right Σ(c−q)², NaN components replaced by the 1e6
-    * stand-in, zip-truncated dims), so the two faces probe identical
-    * lists; ties break by (distance, list id). */
-  private def probeSelect(model: IvfIndex.IvfModel, queries: DataFrame,
-      idCol: String, vecCol: String, nProbe: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val cents = model.centroids.toSeq.toDF("list_id", "centroid")
-    val nc = least(size(col("centroid")), size(col("qv")))
-    val qs = transform(slice(col("qv"), lit(1), nc),
-      x => when(isnan(x), lit(1e6)).otherwise(x))
-    val d = aggregate(
-      zip_with(slice(col("centroid"), lit(1), nc), qs,
-        (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, v) => acc + v)
-    queries
-      .select(col(idCol).cast("long").as("query_id"),
-        col(vecCol).cast("array<double>").as("qv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("d", d)
-      .withColumn("prk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("query_id")).orderBy(col("d"), col("list_id"))))
-      .filter(col("prk") <= nProbe)
-      .select(col("query_id"), col("list_id").cast("int").as("list_id"))
-  }
-
   /** [[exact]] restricted to the `nProbe` IVF lists nearest each query —
     * the persisted/100 TB serve: an on-disk [[IvfIndex]] layout prunes to
     * exactly the probed `list_id=` partitions (static isin, the
@@ -120,9 +70,10 @@ object RangeSearch {
     * as a subset of [[exact]]); nProbe ≥ nLists reproduces [[exact]]
     * row-for-row — the exhaustive-probe identity the driver row gates.
     *
-    * Probe selection is DISTRIBUTED ([[probeSelect]] — the
-    * [[IvfIndex.searchDistributed]] posture): an offline batch of any
-    * size works, nothing query-sized ever reaches the driver. The only
+    * Probe selection is DISTRIBUTED — each query row explodes the
+    * first `nProbe` lists of [[IvfIndex.IvfModel.nearestLists]], the
+    * rule every IVF face applies, in-row: an offline batch of any size
+    * works, nothing query-sized ever reaches the driver. The only
     * collect is the DISTINCT probed-list set (≤ nLists ints — the
     * bounded payload static partition pruning needs). With
     * `broadcastProbes` (default) the (queries × nProbe)-row probe frame
@@ -133,15 +84,15 @@ object RangeSearch {
       broadcastProbes: Boolean = true): DataFrame = {
     require(r2 >= 0L, s"r2 must be >= 0: $r2")
     require(nProbe >= 1, s"nProbe must be >= 1: $nProbe")
-    validate(queries, vecCol, "query")
-    val sel = probeSelect(model, queries, idCol, vecCol, nProbe)
-      .localCheckpoint() // probe pairs reused: list-id prune + the join
-    val q = queries.select(col(idCol).cast("long").as("query_id"),
+    PqIndex.vectorShape(queries, vecCol, "RangeSearch query")
+    // a narrow projection of the query batch: the distinct-list collect
+    // and the join each recompute it rather than pay a checkpoint job
+    val probes0 = queries.select(col(idCol).cast("long").as("query_id"),
+        explode(model.nearestLists(col(vecCol), nProbe)).as("list_id"),
         grid(col(vecCol)).as("gq"))
       .withColumn("qq", Similarity.dot(col("gq"), col("gq")))
-    val probes0 = sel.join(q, Seq("query_id"))
     val probes = if (broadcastProbes) broadcast(probes0) else probes0
-    val probedLists = sel.select(col("list_id")).distinct()
+    val probedLists = probes0.select(col("list_id")).distinct()
       .collect().map(_.getInt(0)).sorted
     model.assigned
       .filter(col("list_id").isin(probedLists.map(Int.box): _*))

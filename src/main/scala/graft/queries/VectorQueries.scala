@@ -624,11 +624,10 @@ object VectorQueries {
          FROM tr"""),
 
     // ── Integer-exact distributed Lloyd k-means over the embeddings
-    //    (ext.KMeans): k=4, two assignment passes, 10⁻⁶-grid BIGINT
-    //    distances and half-up integer centroid means — bit-reproducible
-    //    where float Lloyd's is shuffle-order-dependent. Per round ONE
-    //    broadcast comp⋈centroid join + two partial aggregates; nothing
-    //    collected to the driver.
+    //    (ext.KMeans = PQ training with one subspace): k=4, two
+    //    assignment passes, 10⁻⁶-grid BIGINT distances and half-up
+    //    integer centroid means — bit-reproducible where float Lloyd's
+    //    is shuffle-order-dependent.
     QuerySpec("q_kmeans", (s, dir) =>
       graft.ext.KMeans.assignments(Tables.embeddings(s, dir),
         "vec_id", "embedding", k = 4, rounds = 2),
@@ -781,11 +780,12 @@ object VectorQueries {
 
     // ── ANN index INSERT path: build the sign-quantizer index on half
     //    the corpus (even vec_ids), persist, assign the other half to the
-    //    existing lists WITHOUT refitting (IvfIndex.assignTo — the same
-    //    argmin/tie rule as probe selection), land it as its own
-    //    `batch=1` wave (dynamic partition overwrite — crash/replay-
-    //    idempotent, manifest-committed after the data), reload the
-    //    pinned {0,1} snapshot, and serve a pruned probe over the union.
+    //    existing lists WITHOUT refitting (IvfIndex.assignTo — the
+    //    first list of the nearest-list rule every probe applies), land
+    //    it as its own `batch=1` wave (dynamic partition overwrite —
+    //    crash/replay-idempotent, manifest-committed after the data),
+    //    reload the pinned {0,1} snapshot, and serve a pruned probe over
+    //    the union.
     //    The oracle is the same same-bucket brute force over ALL
     //    embeddings as q_ann_ivf_pruned — hash-proving inserted rows
     //    land in exactly the lists probes scan, and the wave append
@@ -1280,12 +1280,13 @@ object VectorQueries {
         deleteWhere = Some("vid % 5 = 1"))),
 
     // ── ANN: DISTRIBUTED probe selection (IvfIndex.searchDistributed) —
-    //    probe lists come from a broadcast-centroid argmin join, not
-    //    search's driver-side collect, so the query batch can be
-    //    arbitrarily large. Sign quantizer + nProbe = 1 keeps the result
-    //    same-bucket brute force, hash-gated by the SAME SQL oracle as
-    //    q_ann_ivf_pruned — proving the distributed selection probes
-    //    exactly the lists the driver-side rule picks.
+    //    each query row explodes its nearest lists in-row and joins the
+    //    corpus directly, with no collect of (query, list) pairs as in
+    //    search, so the query batch can be arbitrarily large. Sign
+    //    quantizer + nProbe = 1 keeps the result same-bucket brute
+    //    force, hash-gated by the SAME SQL oracle as q_ann_ivf_pruned —
+    //    proving the distributed face probes exactly the lists search
+    //    does.
     QuerySpec("q_ann_ivf_dist", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val model = graft.ext.IvfIndex.buildSign(emb, "vec_id", "embedding",
@@ -1295,7 +1296,7 @@ object VectorQueries {
         k = 3, nProbe = 1)
     },
       // distributed probe selection ≡ same-bucket brute force — identical
-      // oracle to q_ann_ivf_pruned (the driver-side selection twin)
+      // oracle to q_ann_ivf_pruned (the collecting search twin)
       sameBucketTop3Oracle(bits = 4)),
 
     // ── Exact pairwise co-moment matrix (ext.Comoments): BIGINT

@@ -42,8 +42,8 @@ object VectorIndexStream {
   /** One wave under `batch=<batchId + 1>` — the [[WaveStream
     * .appendBatch]] step over the index's single write path ([[graft
     * .ext.IvfIndex.appendSave]], i.e. [[graft.model.WaveTable.append]])
-    * and assignment rule ([[graft.ext.IvfIndex.assignTo]], the same
-    * argmin/tie/NaN discipline as every probe face), so the layout and
+    * and assignment rule ([[graft.ext.IvfIndex.assignTo]], the
+    * nearest-list rule every probe face applies), so the layout and
     * list choice cannot diverge between batch, incremental, and
     * streaming writers. Public so specs can drive replays directly. */
   def appendBatch(batch: DataFrame, idCol: String, vecCol: String,

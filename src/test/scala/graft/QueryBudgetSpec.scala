@@ -24,9 +24,9 @@ class QueryBudgetSpec extends SparkSpec {
     "q_flow_pipeline" -> (5, 1),
     "q_minhash_lsh" -> (12, 3),
     "q_components_adaptive" -> (61, 1),
-    "q_pq_codes" -> (21, 2),
+    "q_pq_codes" -> (19, 2),
     "q_kmeans" -> (16, 2),
-    "q_ann_ivf_dist" -> (7, 3),
+    "q_ann_ivf_dist" -> (5, 2),
     "q_bm25" -> (6, 2),
     "q_image_dedup" -> (6, 2),
     "q_contamination" -> (5, 3),
@@ -60,8 +60,8 @@ class QueryBudgetSpec extends SparkSpec {
   // thread: construction plus the count, after one warm-up.
   private val waveBudgets = Seq(
     "q_bm25_append" -> (33, 4),
-    "q_ann_ivf_append" -> (18, 2),
-    "q_ann_ivfpq_delete" -> (60, 7))
+    "q_ann_ivf_append" -> (16, 2),
+    "q_ann_ivfpq_delete" -> (58, 7))
 
   waveBudgets.foreach { case (name, (jobs, exchanges)) =>
     test(s"$name: job and shuffle-exchange budget (all threads)") {

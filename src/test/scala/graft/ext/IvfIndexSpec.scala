@@ -198,6 +198,30 @@ class IvfIndexSpec extends SparkSpec {
     assert(run(appended) == run(full) && run(full).nonEmpty)
   }
 
+  test("assignTo and both searches refuse vectors the rule cannot place") {
+    // a vector shorter than the centroids or with a NULL component has no
+    // defined distance; it must raise by name instead of landing in an
+    // arbitrary list (list 0) that no probe for it scans
+    val km = IvfIndex.build(vecs, "vec_id", "embedding", nLists = 3)
+    val short = Seq((900L, Seq(10.0, 0.0))).toDF("vec_id", "embedding")
+    val nullComp = Seq((901L, Seq[java.lang.Double](10.0, null, 0.0, 0.0)))
+      .toDF("vec_id", "embedding")
+    def message(run: => Any): String = {
+      val e = intercept[Exception](run)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    }
+    for ((bad, why) <- Seq(short -> "shorter than",
+        nullComp -> "NULL component")) {
+      assert(message(IvfIndex.assignTo(km, bad, "vec_id", "embedding")
+        .collect()).contains(why))
+      assert(message(IvfIndex.search(km, bad, "vec_id", "embedding", 3, 1)
+        .collect()).contains(why))
+      assert(message(IvfIndex.searchDistributed(km, bad, "vec_id",
+        "embedding", 3, 1).collect()).contains(why))
+    }
+  }
+
   test("searchDistributed ≡ search: k-means, sign, NaN, and loaded models") {
     // the distributed probe selection (broadcast-centroid argmin join)
     // must pick the same lists — and so the same results — as search's

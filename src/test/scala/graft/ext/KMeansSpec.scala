@@ -69,4 +69,23 @@ class KMeansSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sortBy(_._1)
     assert(a === b)
   }
+
+  test("guards raise loudly: empty, NULL and ragged vector frames") {
+    val empty = Seq.empty[(Long, Seq[Double])].toDF("id", "vec")
+    val e1 = intercept[IllegalArgumentException] {
+      KMeans.assignments(empty, "id", "vec", 2, 1)
+    }
+    assert(e1.getMessage.contains("non-empty"))
+    // a NULL vector must not silently drop out of the assignment
+    val withNull = Seq((1L, Seq(0.1)), (2L, null)).toDF("id", "vec")
+    val e2 = intercept[IllegalArgumentException] {
+      KMeans.assignments(withNull, "id", "vec", 1, 1)
+    }
+    assert(e2.getMessage.contains("NULL"))
+    val ragged = Seq((1L, Seq(0.1, 0.2)), (2L, Seq(0.1))).toDF("id", "vec")
+    val e3 = intercept[IllegalArgumentException] {
+      KMeans.assignments(ragged, "id", "vec", 1, 1)
+    }
+    assert(e3.getMessage.contains("ragged"))
+  }
 }

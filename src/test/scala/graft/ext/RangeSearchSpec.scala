@@ -116,10 +116,13 @@ class RangeSearchSpec extends SparkSpec {
 
   test("distributed probe selection matches the driver-side rule list " +
       "for list (pruned face, every nProbe)") {
-    // replay IvfIndex.search's driver loop in the test and demand the
-    // pruned result equal exact-restricted-to-those-lists — pinning that
-    // probeSelect's broadcast-centroid argmin picks the SAME lists the
-    // old collect-based selection did, at every probe width
+    // the reference implementation of the nearest-list rule: replay the
+    // former driver loop of IvfIndex.search in the test (Σ(c−q)² fold,
+    // ties to the lower list id) and demand that every IVF face picks
+    // the SAME lists at every probe width — the pruned range face (its
+    // result equals exact-restricted-to-those-lists), both searches
+    // (with k above the corpus size, their neighbors are exactly the
+    // probed lists' rows), and assignTo (the rule's first list)
     val rnd = new scala.util.Random(23)
     val vecs = (1L to 90L).map(i => i -> Seq.fill(4)(rnd.nextDouble()))
     val qs = vecs.filter(_._1 <= 4)
@@ -128,18 +131,36 @@ class RangeSearchSpec extends SparkSpec {
     val exact = pairs(RangeSearch.exact(df(vecs), df(qs), "id", "vec", r2))
     val listOf = model.assigned.select(col("neighbor_id"), col("list_id"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    def replay(qv: Seq[Double], nProbe: Int): Seq[Int] =
+      model.centroids.map { case (lid, c) =>
+        val d = c.zip(qv).map { case (x, y) => (x - y) * (x - y) }.sum
+        (lid, d)
+      }.sortBy(_._2).take(nProbe).map(_._1).toSeq
+    def neighbors(out: org.apache.spark.sql.DataFrame) =
+      out.select("query_id", "neighbor_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val assigned = IvfIndex.assignTo(model, df(vecs), "id", "vec")
+      .select("neighbor_id", "list_id").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(assigned === vecs.map { case (id, v) => id -> replay(v, 1).head }
+      .toMap)
     for (nProbe <- 1 to 5) {
       val wantLists = qs.map { case (qid, qv) =>
-        qid -> model.centroids.map { case (lid, c) =>
-          val d = c.zip(qv).map { case (x, y) => (x - y) * (x - y) }.sum
-          (lid, d)
-        }.sortBy(_._2).take(nProbe).map(_._1).toSet
-      }.toMap
+        qid -> replay(qv, nProbe).toSet }.toMap
       val want = exact.filter { case (qid, nid, _) =>
         wantLists(qid).contains(listOf(nid)) }
       val got = pairs(RangeSearch.probed(model, df(qs), "id", "vec", r2,
         nProbe))
       assert(got === want, s"nProbe=$nProbe")
+      val wantNeighbors = (for {
+        (qid, _) <- qs; (nid, _) <- vecs
+        if nid != qid && wantLists(qid).contains(listOf(nid))
+      } yield (qid, nid)).toSet
+      assert(neighbors(IvfIndex.search(model, df(qs), "id", "vec",
+        k = vecs.size, nProbe)) === wantNeighbors, s"search nProbe=$nProbe")
+      assert(neighbors(IvfIndex.searchDistributed(model, df(qs), "id",
+        "vec", k = vecs.size, nProbe)) === wantNeighbors,
+        s"searchDistributed nProbe=$nProbe")
     }
   }
 
